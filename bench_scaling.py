@@ -107,10 +107,7 @@ def run_bench(spark) -> dict:
 
     workdir = tempfile.mkdtemp(prefix="scale_")
     cfg = CrawlConfig(max_rounds=n_rounds, use_bloom=True, bloom_buckets=32, n_salt=8,
-                      seq_mode="hash",
-                      partition_frontier=os.environ.get("BENCH_PARTITION", "true") == "true",
-                      bloom_telemetry=os.environ.get("BENCH_TELEMETRY", "true") == "true",
-                      frontier_mode=os.environ.get("BENCH_FRONTIER_MODE", "cow"))
+                      seq_mode="hash")
     # one-time seed injection + Bloom build + snapshot 0, excluded from the
     # measured window — the metric is steady-state crawl-loop throughput
     from dataclasses import replace

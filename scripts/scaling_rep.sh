@@ -1,7 +1,7 @@
 #!/bin/bash
 # One probe-bracketed scaling rep (north-rule criterion 3 evidence).
 #
-# Runs the identical MOR-frontier crawl job at 2 and 8 cores on the same
+# Runs the identical crawl job at 2 and 8 cores on the same
 # Spark-generated 48M-page / 16M-seed input, with bench_probe.py dual
 # host-health probes (CPU sha control + memory-bandwidth copy probe)
 # bracketing each leg: pre -> 2-core leg -> mid -> 8-core leg -> post.
@@ -10,7 +10,7 @@
 #
 # Usage: bash scripts/scaling_rep.sh [outfile]
 # Output: one JSON object per line (probes + both legs) appended to
-#         $outfile (default /root/repo/scaling_rep_$(date +%s).jsonl).
+#         $outfile (default scaling_rep_<epoch>.jsonl in the repo root).
 set -u
 cd "$(dirname "$0")/.."
 OUT="${1:-scaling_rep_$(date +%s).jsonl}"
@@ -18,7 +18,6 @@ OUT="${1:-scaling_rep_$(date +%s).jsonl}"
 export BENCH_PAGES="${BENCH_PAGES:-48000000}"
 export BENCH_SEEDS="${BENCH_SEEDS:-16000000}"
 export BENCH_ROUNDS="${BENCH_ROUNDS:-1}"
-export BENCH_FRONTIER_MODE="${BENCH_FRONTIER_MODE:-mor}"
 # take the slow shared /tmp disk out of shuffle + snapshot IO.
 # CLEAN FIRST: tmpfs pages count against host memory, and a crashed leg
 # orphans its shuffle dirs — 90+ GB of debris accumulated across reps
@@ -30,7 +29,7 @@ export TMPDIR=/dev/shm/spark_tmp
 
 probe() { echo "{\"probe\": \"$1\", $(python bench_probe.py | sed 's/^{//')" >> "$OUT"; }
 
-echo "{\"rep_config\": {\"pages\": $BENCH_PAGES, \"seeds\": $BENCH_SEEDS, \"rounds\": $BENCH_ROUNDS, \"mode\": \"$BENCH_FRONTIER_MODE\"}}" >> "$OUT"
+echo "{\"rep_config\": {\"pages\": $BENCH_PAGES, \"seeds\": $BENCH_SEEDS, \"rounds\": $BENCH_ROUNDS}}" >> "$OUT"
 probe pre
 python bench_scaling.py 2 >> "$OUT" 2>>"$OUT.err"
 probe mid

@@ -13,7 +13,7 @@ resumable, and is exactly how an Iceberg COW MERGE loop behaves.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +29,12 @@ from spider_spark.round import (
     seeds_to_frontier,
 )
 from spider_spark.seen import SeenSet
+
+
+# D5: frontier hive-partitioned by status — the hot `status='new'` scan
+# (next round's claim filter) prunes to the 'new' directory instead of
+# re-reading done/failed/denied rows
+FRONTIER_PARTITIONING = {"frontier": ["status"]}
 
 
 @dataclass
@@ -52,7 +58,6 @@ def crawl(
 ) -> CrawlSummary:
     cfg = cfg or CrawlConfig()
     workdir = Path(workdir)
-    mor = cfg.frontier_mode == "mor"
 
     # Compile robots Allow/Disallow patterns (RFC 9309 wildcards +
     # longest-match lengths) ONCE per crawl — run_round's compile_policy
@@ -88,17 +93,12 @@ def crawl(
         def stats0():
             out = {"by_status": {"new": frontier0.count()}}
             out["n_new"] = out["by_status"]["new"]
-            if mor:
-                out["base_rows"] = out["n_new"]
-                out["mor_delta_rows"] = 0
             if seen is not None:
                 out["seen"] = seen.seg_stats()
             return out
 
-        pb = {"frontier": ["status"]} if cfg.partition_frontier else None
-        tables.write_snapshot(workdir, 0, tbls, partition_by=pb,
-                              stats_fn=stats0,
-                              frontier_base=0 if mor else None)
+        tables.write_snapshot(workdir, 0, tbls, partition_by=FRONTIER_PARTITIONING,
+                              stats_fn=stats0)
         for df in tbls.values():
             df.unpersist()
         start = 0
@@ -107,40 +107,22 @@ def crawl(
     # the Bloom overflow decision cost zero Spark jobs (they were computed
     # cache-hot during the previous round's write phase)
     prev_stats: dict = (tables.read_manifest(workdir, start) or {}).get("stats", {})
+    if "by_status" not in prev_stats:
+        raise ValueError(
+            f"{workdir}: manifest of round {start} has no stats.by_status — "
+            f"written by an older engine; restart the crawl without resume"
+        )
 
     rounds_run = 0
     rnd = start
     for rnd in range(start + 1, cfg.max_rounds + 1):
-        n_new_prev = prev_stats.get("n_new")
-        if n_new_prev == 0:
+        if prev_stats["by_status"].get("new", 0) == 0:
             # checked BEFORE the read: an all-empty partitioned frontier
             # (empty seed list) leaves no schema-bearing files to read
             rnd -= 1
             break
 
-        # pagerank reprioritization touches every row's priority — in mor
-        # that is by definition a base rewrite, so the round runs cow-style
-        # and its snapshot becomes the new compaction base
-        pagerank_fires = bool(
-            cfg.pagerank_every and rnd > 1 and (rnd - 1) % cfg.pagerank_every == 0
-        )
-        frontier_urls = None
-        if mor and not pagerank_fires:
-            # scheduling read: resolved 'new' rows only (base partition-
-            # pruned + children deltas); dedup side: 2-column urls scan
-            frontier = tables.read_frontier_new(spark, workdir, rnd - 1)
-            frontier_urls = tables.read_frontier_urls(spark, workdir, rnd - 1)
-            round_cfg = cfg
-        elif mor:
-            frontier = tables.read_frontier_resolved(spark, workdir, rnd - 1)
-            round_cfg = replace(cfg, frontier_mode="cow")
-        else:
-            frontier = tables.read_table(spark, workdir, rnd - 1, "frontier")
-            round_cfg = cfg
-            if n_new_prev is None:  # legacy manifest: partition-pruned probe
-                if frontier.where(F.col("status") == "new").limit(1).count() == 0:
-                    rnd -= 1
-                    break
+        frontier = tables.read_frontier_resolved(spark, workdir, rnd - 1)
 
         seen_mark = None
         seen = None
@@ -155,12 +137,12 @@ def crawl(
             # most the round that overflowed it
             seg_stats = prev_stats.get("seen")
             seen.maybe_rebuild(
-                frontier_urls if frontier_urls is not None else frontier,
+                frontier,
                 stats=[tuple(s) for s in seg_stats] if seg_stats else None,
             )
             seen_mark = seen.mark
 
-        if pagerank_fires:
+        if cfg.pagerank_every and rnd > 1 and (rnd - 1) % cfg.pagerank_every == 0:
             all_links = tables.read_appended(spark, workdir, "links", upto_round=rnd - 1)
             if all_links is not None:
                 ranks = None
@@ -196,28 +178,15 @@ def crawl(
                     frontier = apply_priority(frontier, ranks)
 
         result: RoundResult = run_round(
-            spark, frontier, pages, policy, rnd, round_cfg,
-            seen_mark=seen_mark, frontier_urls=frontier_urls,
+            spark, frontier, pages, policy, rnd, cfg, seen_mark=seen_mark,
         )
-        mor_delta_round = result.frontier is None
-        if mor_delta_round:
-            tbls = {
-                "frontier_updates": result.updates,
-                "frontier_children": result.children,
-                "frontier_inlinks": result.inlink_deltas,
-                "links": result.links,
-                "items": result.items,
-                "fetch_log": result.fetch_log,
-            }
-            new_urls = result.children
-        else:
-            tbls = {
-                "frontier": result.frontier,
-                "links": result.links,
-                "items": result.items,
-                "fetch_log": result.fetch_log,
-            }
-            new_urls = result.frontier.where(F.col("discovered_round") == rnd)
+        tbls = {
+            "frontier": result.frontier,
+            "links": result.links,
+            "items": result.items,
+            "fetch_log": result.fetch_log,
+        }
+        new_urls = result.frontier.where(F.col("discovered_round") == rnd)
         if seen is not None:
             seg = seen.merged(new_urls).persist()
             tbls["seen_segments"] = seg
@@ -239,83 +208,10 @@ def crawl(
         # and duplicate it up to 5x (measured: 210 core-s of jobs for a
         # 60 s wall before this; the same status groupBy doubles as next
         # round's empty-check + the final summary).
-        frontier_base = None
-        if mor_delta_round:
-            # mor accounting: by_status rolls forward from the deltas alone
-            # (updates are absolute post-states of previously-'new' rows;
-            # children are all 'new') — no full-frontier job anywhere.
-            # ONE fused job: unioning the children count under a sentinel
-            # status materializes the children cache AND both counters in a
-            # single job submit instead of two serial ones — the per-round
-            # fixed cost is job-submit-dominated at small rounds (PLANS.md
-            # fixed-cost model), so every fused job moves the scaling floor.
-            stat_rows = (
-                result.updates.groupBy("status").count()
-                .unionByName(
-                    result.children.agg(
-                        F.lit("__children").alias("status"),
-                        F.count(F.lit(1)).alias("count"),
-                    )
-                )
-            ).collect()
-            upd_counts = {
-                r["status"]: r["count"] for r in stat_rows
-                if r["status"] != "__children"
-            }
-            n_children = sum(
-                r["count"] for r in stat_rows if r["status"] == "__children"
-            )
-            if "by_status" in prev_stats:
-                by_status = dict(prev_stats["by_status"])
-            else:
-                # legacy/stripped manifest: probe the committed state once
-                # instead of silently rolling deltas forward from zero
-                # (which would make every count and the final CrawlSummary
-                # report post-resume deltas only) — same fallback the cow
-                # branch's partition-pruned probe provides
-                by_status = {
-                    r["status"]: r["count"]
-                    for r in tables.read_frontier_resolved(spark, workdir, rnd - 1)
-                    .groupBy("status").count().collect()
-                }
-            n_touched = sum(upd_counts.values())
-            for s in ("done", "failed", "denied"):
-                if upd_counts.get(s):
-                    by_status[s] = by_status.get(s, 0) + upd_counts[s]
-            by_status["new"] = (
-                by_status.get("new", 0)
-                - (n_touched - upd_counts.get("new", 0))
-                + n_children
-            )
-            delta_rows = prev_stats.get("mor_delta_rows", 0) + n_touched + n_children
-            base_rows = prev_stats.get("base_rows", 0)
-            frontier_base = tables.frontier_base_round(workdir, rnd - 1)
-            if delta_rows > cfg.compact_ratio * max(base_rows, 1):
-                # compaction: fold all deltas (committed + this round's,
-                # still uncommitted) into a new full base written in THIS
-                # snapshot — one manifest commit covers both, exactly like
-                # Iceberg rewrite_data_files stacked on the MERGE snapshot
-                tbls["frontier"] = tables.resolve_with_pending(
-                    spark, workdir, rnd - 1,
-                    result.updates, result.children, result.inlink_deltas,
-                )
-                if cfg.write_coalesce > 0:
-                    # tbls was coalesced before this branch ran — the
-                    # compacted frontier (the round's LARGEST table) must
-                    # honor the same file-count setting
-                    tbls["frontier"] = tbls["frontier"].coalesce(cfg.write_coalesce)
-                frontier_base = rnd
-                base_rows = sum(by_status.values())
-                delta_rows = 0
-        else:
-            by_status = {
-                r["status"]: r["count"]
-                for r in result.frontier.groupBy("status").count().collect()
-            }
-            if mor:  # pagerank compaction round: cow write becomes new base
-                frontier_base = rnd
-                base_rows = sum(by_status.values())
-                delta_rows = 0
+        by_status = {
+            r["status"]: r["count"]
+            for r in result.frontier.groupBy("status").count().collect()
+        }
         seen_stats = None
         if seen is not None:
             # Bloom-merge job fusion: seg_stats()'s n_buckets-row collect
@@ -326,19 +222,12 @@ def crawl(
 
         def round_stats():
             out = {"by_status": by_status, "n_new": by_status.get("new", 0)}
-            if mor:
-                out["base_rows"] = base_rows
-                out["mor_delta_rows"] = delta_rows
             if seen_stats is not None:
                 out["seen"] = seen_stats
             return out
 
-        # D5: frontier hive-partitioned by status — the hot `status='new'`
-        # scan (empty-check + next round's claim filter) prunes to the
-        # 'new' directory instead of re-reading done/failed/denied rows
-        pb = {"frontier": ["status"]} if cfg.partition_frontier else None
-        tables.write_snapshot(workdir, rnd, tbls, partition_by=pb,
-                              stats_fn=round_stats, frontier_base=frontier_base)
+        tables.write_snapshot(workdir, rnd, tbls, partition_by=FRONTIER_PARTITIONING,
+                              stats_fn=round_stats)
         prev_stats = (tables.read_manifest(workdir, rnd) or {}).get("stats", {})
         if cfg.backoff_factor > 1.0 or cfg.recover_factor > 1.0:
             # B7: blocked hosts get slower budgets next round; with
@@ -367,10 +256,7 @@ def crawl(
             df.unpersist()
         rounds_run += 1
 
-    by_status = prev_stats.get("by_status")
-    if by_status is None:  # legacy manifests
-        final = tables.read_table(spark, workdir, rnd, "frontier")
-        by_status = dict(final.groupBy("status").count().collect())
+    by_status = prev_stats["by_status"]
     return CrawlSummary(
         rounds_run=rounds_run,
         last_round=rnd,

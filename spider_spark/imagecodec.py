@@ -11,9 +11,11 @@ Implemented from the public format specifications only:
   and by test fixtures.
 - GIF  (GIF87a/GIF89a spec): logical-screen dims, first-frame LZW decode
   to RGB via the global/local color table, de-interlacing.
-- JPEG (ITU T.81): dimensions only, via the SOFn marker scan — pixel
-  decode of entropy-coded JPEG is out of scope (inject PIL in a real
-  deployment; the media.py decoder stays injectable).
+- JPEG (ITU T.81): dimensions via the SOFn marker scan, and full pixel
+  decode of baseline sequential huffman files (``jpeg_decode``) with a
+  matching fixture encoder. Progressive, arithmetic and 12-bit files
+  raise (inject PIL in a real deployment; the media.py decoder stays
+  injectable).
 
 Scale note: this codec runs inside Arrow-batched mapInPandas tasks, one
 image per row — its per-image cost is what matters, not vectorization
@@ -820,10 +822,12 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
 
     Supports: SOF0 (and SOF1 tables-as-baseline), 8-bit, 1 or 3
     components, sampling factors 1-2 (4:4:4/4:2:2/4:2:0 and the
-    transposed variants), DQT/DHT/DRI/RSTn, interleaved scans, and the
-    single-component non-interleaved scan layout. Chroma upsampling is
-    sample replication; color conversion is JFIF (ITU T.871) full-range.
-    Progressive (SOF2), arithmetic coding, and 12-bit precision raise."""
+    transposed variants), DQT/DHT/DRI/RSTn, interleaved scans, and
+    non-interleaved scans (one per component, decoded until every frame
+    component is covered). Chroma upsampling is sample replication; color
+    conversion is JFIF (ITU T.871) full-range. Progressive (SOF2),
+    arithmetic coding, 12-bit precision, a scan that references a missing
+    table, and a file whose scans leave a component uncovered raise."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
     qts: dict[int, np.ndarray] = {}
@@ -831,6 +835,8 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
     ac_tabs: dict[int, tuple] = {}
     restart_interval = 0
     frame = None  # (h, w, comps) with comps = [(cid, hs, vs, qi)]
+    stores: dict[int, np.ndarray] = {}  # cid -> (blocks_y, blocks_x, 64)
+    quant: dict[int, np.ndarray] = {}   # cid -> quant table at its scan
     i = 2
     n = len(payload)
     while i + 4 <= n:
@@ -886,19 +892,39 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
         elif marker == 0xDA:  # SOS — entropy data follows
             if frame is None:
                 raise ValueError("SOS before SOF")
+            by_id = {c[0]: c for c in frame[2]}
             ns = seg[0]
             scan_sel = []
             for c in range(ns):
                 cs, tt = seg[1 + 2 * c], seg[2 + 2 * c]
-                scan_sel.append((cs, tt >> 4, tt & 0x0F))
-            return _jpeg_scan(payload, i + 2 + seglen, frame, scan_sel,
-                              qts, dc_tabs, ac_tabs, restart_interval)
+                td, ta = tt >> 4, tt & 0x0F
+                if cs not in by_id:
+                    raise ValueError(f"scan component {cs} not in frame")
+                if td not in dc_tabs:
+                    raise ValueError(f"missing DC huffman table {td}")
+                if ta not in ac_tabs:
+                    raise ValueError(f"missing AC huffman table {ta}")
+                qi = by_id[cs][3]
+                if qi not in qts:
+                    raise ValueError(f"missing quantization table {qi}")
+                quant[cs] = qts[qi]
+                scan_sel.append((cs, dc_tabs[td], ac_tabs[ta]))
+            i = _jpeg_scan(payload, i + 2 + seglen, frame, scan_sel,
+                           restart_interval, stores)
+            if len(quant) == len(by_id):
+                return _jpeg_assemble(frame, stores, quant)
+            continue
         i += 2 + seglen
-    raise ValueError("JPEG has no scan")
+    if frame is None or not quant:
+        raise ValueError("JPEG has no scan")
+    missing = sorted(c[0] for c in frame[2] if c[0] not in quant)
+    raise ValueError(f"JPEG scans leave frame components {missing} undecoded")
 
 
-def _jpeg_scan(payload, pos, frame, scan_sel, qts, dc_tabs, ac_tabs,
-               restart_interval):
+def _jpeg_scan(payload, pos, frame, scan_sel, restart_interval, stores) -> int:
+    """Decode one scan's entropy-coded data into ``stores`` (zigzag
+    coefficients per component block); returns the offset of the first
+    marker after it. ``scan_sel`` = [(cid, dc_table, ac_table)]."""
     fh, fw, comps = frame
     by_id = {c[0]: c for c in comps}
     hmax = max(c[1] for c in comps)
@@ -906,16 +932,14 @@ def _jpeg_scan(payload, pos, frame, scan_sel, qts, dc_tabs, ac_tabs,
     mcux = -(-fw // (8 * hmax))
     mcuy = -(-fh // (8 * vmax))
     br = _BitReader(payload, pos)
-    planes: dict[int, np.ndarray] = {}
-    # coefficient store per component: (blocks_y, blocks_x, 64)
-    stores = {}
-    for cid, hs, vs, qi in comps:
-        stores[cid] = np.zeros((mcuy * vs, mcux * hs, 64), dtype=np.int64)
-    preds = {cid: 0 for cid, *_ in comps}
+    for cid, _dc, _ac in scan_sel:
+        _, hs, vs, _qi = by_id[cid]
+        stores.setdefault(cid, np.zeros((mcuy * vs, mcux * hs, 64), dtype=np.int64))
+    preds = {cid: 0 for cid, *_ in scan_sel}
     if len(scan_sel) == 1:
         # non-interleaved: blocks cover ceil(comp_w/8) x ceil(comp_h/8)
-        cid, td, ta = scan_sel[0]
-        _, hs, vs, qi = by_id[cid]
+        cid, dc_tab, ac_tab = scan_sel[0]
+        _, hs, vs, _qi = by_id[cid]
         cw = -(-fw * hs // hmax)
         ch = -(-fh * vs // vmax)
         wb, hb = -(-cw // 8), -(-ch // 8)
@@ -927,8 +951,7 @@ def _jpeg_scan(payload, pos, frame, scan_sel, qts, dc_tabs, ac_tabs,
                     if not 0xD0 <= m <= 0xD7:
                         raise ValueError("bad restart marker")
                     preds[cid] = 0
-                coef, preds[cid] = _decode_block(
-                    br, dc_tabs[td], ac_tabs[ta], preds[cid])
+                coef, preds[cid] = _decode_block(br, dc_tab, ac_tab, preds[cid])
                 stores[cid][byy, bxx] = coef
                 cnt += 1
     else:
@@ -941,22 +964,35 @@ def _jpeg_scan(payload, pos, frame, scan_sel, qts, dc_tabs, ac_tabs,
                         raise ValueError("bad restart marker")
                     for k in preds:
                         preds[k] = 0
-                for cid, td, ta in scan_sel:
-                    _, hs, vs, qi = by_id[cid]
+                for cid, dc_tab, ac_tab in scan_sel:
+                    _, hs, vs, _qi = by_id[cid]
                     for v in range(vs):
                         for hh in range(hs):
                             coef, preds[cid] = _decode_block(
-                                br, dc_tabs[td], ac_tabs[ta], preds[cid])
+                                br, dc_tab, ac_tab, preds[cid])
                             stores[cid][my * vs + v, mx * hs + hh] = coef
                 cnt += 1
-    # dequantize + IDCT per component (vectorized over all blocks)
+    # skip the final byte's padding bits and any bytes up to the next marker
+    d, p = payload, br.pos
+    while p + 1 < len(d) and not (d[p] == 0xFF and d[p + 1] != 0x00):
+        p += 1
+    return p
+
+
+def _jpeg_assemble(frame, stores, quant) -> np.ndarray:
+    """Dequantize + IDCT every component (vectorized over all blocks),
+    upsample chroma and convert to RGB."""
+    fh, fw, comps = frame
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
+    planes: dict[int, np.ndarray] = {}
     for cid, hs, vs, qi in comps:
         zz = stores[cid]
         hb, wb = zz.shape[:2]
         nat = np.zeros_like(zz)
         nat[:, :, _ZIGZAG] = zz
         coef = (nat.reshape(hb, wb, 8, 8)
-                * qts[qi].reshape(8, 8)).astype(np.float64)
+                * quant[cid].reshape(8, 8)).astype(np.float64)
         spatial = np.einsum("ux,ijuv,vy->ijxy", _DCT_C, coef, _DCT_C)
         blocks = np.clip(np.round(spatial + 128.0), 0, 255).astype(np.uint8)
         plane = blocks.transpose(0, 2, 1, 3).reshape(hb * 8, wb * 8)

@@ -38,7 +38,6 @@ from pyspark.sql.window import Window
 
 from spider_spark import parse
 from spider_spark.canon import (
-    canonical_col,
     host_col,
     normalize_href_col,
     url_hash_col,
@@ -77,8 +76,6 @@ class CrawlConfig:
                                  # with a clean round step crawl_delay/budget
                                  # back toward the pinned baseline, so
                                  # backoff is a closed loop, not a ratchet
-    partition_frontier: bool = True  # D5: hive-partition frontier by status
-    bloom_telemetry: bool = True     # _bloom probe counters into fetch_log
     honor_meta_robots: bool = False  # in-page REP directives: <meta
                                      # name=robots> noindex keeps the page
                                      # out of items, nofollow empties its
@@ -88,25 +85,6 @@ class CrawlConfig:
                                      # ignores in-page directives); all
                                      # gates are codegen rlike/HOF exprs,
                                      # no Python in the hot loop.
-    jvm_parse: bool = True      # builtin-regexp page parse (codegen, no
-                                # python workers); False = pandas UDF path
-                                # (charset-faithful gb18030 double-decode)
-    frontier_mode: str = "cow"  # "cow": full frontier rewrite per round
-                                # (Iceberg copy-on-write MERGE analog).
-                                # "mor": merge-on-read — each round writes
-                                # only DELTAS (status updates for claimed/
-                                # denied rows, new children, inlink
-                                # increments); readers resolve latest-wins
-                                # per url against the last full base, and
-                                # the loop compacts (rewrites the base)
-                                # only when deltas outgrow compact_ratio.
-                                # At the 10^10 design point this is the
-                                # difference between merging 10^10 rows
-                                # per round and merging ~|claimed|+
-                                # |children| (Iceberg MOR w/ equality
-                                # deletes + periodic rewrite_data_files).
-    compact_ratio: float = 0.3  # mor: compact when cumulative delta rows
-                                # exceed this fraction of the base rows
     max_urls_per_host: int = 0  # >0: crawler-trap guard — cumulative cap on
                                 # frontier rows per host (calendar pages,
                                 # session-id explosions, infinite facet
@@ -132,12 +110,6 @@ class CrawlConfig:
     seq_mode: str = "global"    # "global": dense global discovery rank —
                                 # exact parity with the reference's single
                                 # FIFO frontier (3 extra jobs/round).
-                                # "per_host": rank within host inside the
-                                # main plan — one window, no extra action;
-                                # preserves depth/fetch-round/seen-set
-                                # invariants (cross-host order is a
-                                # single-frontier artifact the scheduler
-                                # never consumes).
                                 # "hash": windowless deterministic seq from
                                 # xxhash64(url) — no extra pass at all;
                                 # stable (not dense, not discovery-ordered),
@@ -148,9 +120,8 @@ class CrawlConfig:
         # back to pagerank would misprioritize an entire crawl.
         _allowed = {
             "priority_source": {"pagerank", "opic", "focused"},
-            "frontier_mode": {"cow", "mor"},
             "trap_scope": {"host", "domain"},
-            "seq_mode": {"global", "per_host", "hash"},
+            "seq_mode": {"global", "hash"},
         }
         for field_name, allowed in _allowed.items():
             v = getattr(self, field_name)
@@ -162,17 +133,11 @@ class CrawlConfig:
 
 @dataclass
 class RoundResult:
-    frontier: DataFrame | None  # merged next frontier (cow) / None (mor)
+    frontier: DataFrame  # merged next frontier
     links: DataFrame
     items: DataFrame
     fetch_log: DataFrame
     cached: list[DataFrame] = field(default_factory=list)  # unpersist after snapshot write
-    # mor deltas (None in cow mode): updates carry ABSOLUTE values for rows
-    # touched this round (every touched row was status='new' before, so the
-    # absolute post-state is fully known without reading the base)
-    updates: DataFrame | None = None       # url, status, fetched_round, attempt, upd_round
-    children: DataFrame | None = None      # full frontier schema, all status='new'
-    inlink_deltas: DataFrame | None = None  # url, inlink_delta (additive)
 
 
 def seeds_frontier_df(seeds_df: DataFrame, round_no: int = 0) -> DataFrame:
@@ -391,18 +356,12 @@ def run_round(
     round_no: int,
     cfg: CrawlConfig,
     seen_mark: Callable[[DataFrame], DataFrame] | None = None,
-    frontier_urls: DataFrame | None = None,
 ) -> RoundResult:
-    """One crawl round. PRECONDITION: ``pages`` is unique by url (the
-    Iceberg-primary-key contract of the corpus table) — a duplicate url
-    would fan out the fetch join and multiply frontier MERGE rows.
-
-    ``frontier_urls``: the complete url set for first-wins dedup. Defaults
-    to ``frontier.select("url")`` — correct when ``frontier`` is the full
-    table (cow). The mor loop passes the resolved-new rows as ``frontier``
-    (all it schedules from) plus the cheap urls-only scan separately."""
-    if frontier_urls is None:
-        frontier_urls = frontier.select("url")
+    """One crawl round over the full ``frontier`` table. PRECONDITION:
+    ``pages`` is unique by url (the Iceberg-primary-key contract of the
+    corpus table) — a duplicate url would fan out the fetch join and
+    multiply frontier MERGE rows."""
+    frontier_urls = frontier.select("url")
     new_rows = frontier.where(F.col("status") == "new")
 
     # --- politeness + robots via broadcast policy (A12/A13) ----------------
@@ -449,10 +408,7 @@ def run_round(
     # ONE cached dataset per round, html dropped after extraction: caching
     # raw html (the widest column) across two materializations doubled both
     # memory and the downstream cache-scan time
-    page_struct = (
-        parse.parse_page_cols(html_str) if cfg.jvm_parse
-        else parse.parse_page_udf(F.col("html"))
-    )
+    page_struct = parse.parse_page_cols(html_str)
     if cfg.honor_meta_robots:
         links_expr = F.when(
             parse.meta_nofollow_col(html_str), F.array().cast("array<string>")
@@ -507,11 +463,10 @@ def run_round(
     # --- dedup against the seen set: Bloom prefilter + exact anti-join -----
     marked = None
     if seen_mark is not None:
-        # one persisted probe pass yields both split halves (and, with
-        # telemetry on, the n_candidates/n_maybe/n_new counters) without
-        # re-running the cogroup probe — the union below scans `marked`
-        # twice, so an unpersisted probe would execute the python-worker
-        # stage twice per round regardless of telemetry
+        # one persisted probe pass yields both split halves and the
+        # fetch_log telemetry counters without re-running the cogroup
+        # probe — the union below scans `marked` twice, so an unpersisted
+        # probe would execute the python-worker stage twice per round
         marked = seen_mark(agg).persist()
         maybe_seen = marked.where(F.col("maybe")).drop("maybe")
         definitely_new = marked.where(~F.col("maybe")).drop("maybe")
@@ -525,12 +480,7 @@ def run_round(
         "url", "cnt", F.col("first.depth").alias("depth"),
         F.col("first.parent_seq").alias("parent_seq"), F.col("first.pos").alias("pos"),
     )
-    if cfg.seq_mode == "per_host":
-        w_seq = Window.partitionBy(host_col(F.col("url"))).orderBy(
-            "parent_seq", "pos", "url"
-        )
-        ranked = new_flat.withColumn("_rank", F.row_number().over(w_seq).cast("long"))
-    elif cfg.seq_mode == "hash":
+    if cfg.seq_mode == "hash":
         # no window, no extra pass: deterministic (not dense, not
         # discovery-ordered) sequence from the url hash. Scheduling only
         # needs a STABLE order; pop_batch tiebreaks on url so hash
@@ -568,8 +518,7 @@ def run_round(
         else:
             def _scope(h):
                 return h
-        # existing per-scope totals from the cheap urls-only scan (works in
-        # both cow and mor — frontier_urls is the complete url set)
+        # existing per-scope totals from the urls-only projection
         host_counts = (
             frontier_urls.select(
                 _scope(host_col(F.col("url"))).alias("_trap_scope"))
@@ -599,80 +548,50 @@ def run_round(
             .select(*_cols)
         )
 
-    # --- frontier MERGE (Iceberg COW analog) or delta emit (MOR) ------------
+    # --- frontier MERGE (Iceberg COW analog) --------------------------------
     status_case = (
         F.when(F.col("ok"), F.lit("done"))
         .when(F.col("attempt") + 1 >= cfg.max_tries, F.lit("failed"))
         .otherwise(F.lit("new"))
     )
-    fetched_round_case = F.when(F.col("ok"), F.lit(round_no)).cast("int")
     inlink_delta = agg.join(frontier_urls, "url", "left_semi").select(
         "url", F.col("cnt").alias("_inlink_d")
     )
-
-    updates = children = inlink_out = None
-    if cfg.frontier_mode == "mor":
-        # Every touched row was status='new' (fetched_round null) before the
-        # round, and `parsed`/`denied_df` carry its current attempt — so the
-        # delta stores the ABSOLUTE post-state and readers resolve with
-        # latest-wins per url, no base read needed at write time. This is
-        # the Iceberg MOR shape: equality-delete + insert of the new row
-        # version, compaction deferred to tables.compact.
-        updates = parsed.select(
+    status_updates = parsed.select(
+        "url",
+        status_case.alias("_status_u"),
+        F.when(F.col("ok"), F.lit(round_no)).cast("int").alias("_fetched_round_u"),
+        F.when(F.col("ok"), F.lit(0)).otherwise(F.lit(1)).alias("_attempt_d"),
+    ).unionByName(
+        denied_df.select(
             "url",
-            status_case.alias("status"),
-            fetched_round_case.alias("fetched_round"),
-            (F.col("attempt") + F.when(F.col("ok"), F.lit(0)).otherwise(F.lit(1))).alias("attempt"),
-        ).unionByName(
-            denied_df.select(
-                "url",
-                F.lit("denied").alias("status"),
-                F.lit(None).cast("int").alias("fetched_round"),
-                "attempt",
-            )
-        ).withColumn("upd_round", F.lit(round_no)).persist()
-        children = new_children.persist()
-        inlink_out = inlink_delta.select("url", F.col("_inlink_d").alias("inlink_delta"))
-        frontier_next = None
-        # updates/children each feed ≥2 jobs (delta-count stats, snapshot
-        # write, optional compaction resolve, seen-set merge)
-        cached = [parsed, agg, updates, children]
-    else:
-        status_updates = parsed.select(
+            F.lit("denied").alias("_status_u"),
+            F.lit(None).cast("int").alias("_fetched_round_u"),
+            F.lit(0).alias("_attempt_d"),
+        )
+    )
+    updated = (
+        frontier.join(status_updates, "url", "left")
+        .join(inlink_delta, "url", "left")
+        .select(
             "url",
-            status_case.alias("_status_u"),
-            fetched_round_case.alias("_fetched_round_u"),
-            F.when(F.col("ok"), F.lit(0)).otherwise(F.lit(1)).alias("_attempt_d"),
-        ).unionByName(
-            denied_df.select(
-                "url",
-                F.lit("denied").alias("_status_u"),
-                F.lit(None).cast("int").alias("_fetched_round_u"),
-                F.lit(0).alias("_attempt_d"),
-            )
+            "url_md5",
+            "url_hash",
+            "host",
+            "depth",
+            F.coalesce(F.col("_status_u"), F.col("status")).alias("status"),
+            "discovered_round",
+            F.coalesce(F.col("_fetched_round_u"), F.col("fetched_round")).alias("fetched_round"),
+            "discovered_seq",
+            (F.col("inlink_count") + F.coalesce(F.col("_inlink_d"), F.lit(0))).alias("inlink_count"),
+            "priority",
+            (F.col("attempt") + F.coalesce(F.col("_attempt_d"), F.lit(0))).alias("attempt"),
         )
-        updated = (
-            frontier.join(status_updates, "url", "left")
-            .join(inlink_delta, "url", "left")
-            .select(
-                "url",
-                "url_md5",
-                "url_hash",
-                "host",
-                "depth",
-                F.coalesce(F.col("_status_u"), F.col("status")).alias("status"),
-                "discovered_round",
-                F.coalesce(F.col("_fetched_round_u"), F.col("fetched_round")).alias("fetched_round"),
-                "discovered_seq",
-                (F.col("inlink_count") + F.coalesce(F.col("_inlink_d"), F.lit(0))).alias("inlink_count"),
-                "priority",
-                (F.col("attempt") + F.coalesce(F.col("_attempt_d"), F.lit(0))).alias("attempt"),
-            )
-        )
-        # two consumers each round (snapshot write + seen-set merge) — persist
-        # so the MERGE join doesn't run twice
-        frontier_next = updated.unionByName(new_children).persist()
-        cached = [parsed, agg, frontier_next]
+    )
+    # two consumers each round (snapshot write + seen-set merge) — persist
+    # so the MERGE join doesn't run twice
+    frontier_next = updated.unionByName(new_children).persist()
+    cached = [parsed, agg, frontier_next]
 
     # --- per-partition fetch lineage + counters (north_rule) ----------------
     fetch_log = (
@@ -686,7 +605,7 @@ def run_round(
         .select(F.lit(round_no).alias("round"), "partition_id", "host",
                 "n_claimed", "n_fetched", "n_missed")
     )
-    if marked is not None and cfg.bloom_telemetry:
+    if marked is not None:
         # FP-rate telemetry (SURVEY.md §7 step 4): one sentinel row per
         # round under host='_bloom', partition_id=-1 — n_claimed=candidates
         # probed, n_fetched=maybe-seen, n_missed=definitely-new. FP rate ≈
@@ -708,10 +627,9 @@ def run_round(
             )
         )
         fetch_log = fetch_log.unionByName(bloom_log)
-    if marked is not None:
-        cached.append(marked)  # persisted above regardless of telemetry
+        cached.append(marked)
 
     return RoundResult(
         frontier=frontier_next, links=links, items=items, fetch_log=fetch_log,
-        cached=cached, updates=updates, children=children, inlink_deltas=inlink_out,
+        cached=cached,
     )

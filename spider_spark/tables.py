@@ -5,7 +5,8 @@ contract over plain Parquet: one immutable snapshot directory per crawl
 round, a JSON manifest written LAST (commit point), resume = latest round
 with a manifest. Maps 1:1 onto Iceberg:
 
-- snapshot dir            ↔ Iceberg snapshot (COW MERGE of the frontier)
+- snapshot dir            ↔ Iceberg snapshot (copy-on-write MERGE of the
+                            frontier: every round rewrites it in full)
 - manifest.json           ↔ snapshot metadata / manifest list
 - read latest manifest    ↔ time travel to current snapshot
 - crash between data and manifest ⇒ orphan dir, ignored on resume
@@ -17,10 +18,16 @@ redesign; the engine only touches this module for IO.
 Layout::
 
     workdir/snapshots/round_00000/manifest.json
-                                  frontier/   (full rewrite per round — COW)
-                                  links/      (per-round append)
-                                  items/      (per-round append)
-                                  fetch_log/  (per-round append)
+                                  frontier/       (full rewrite per round,
+                                                   partitioned by status)
+                                  seen_segments/  (full rewrite per round,
+                                                   Bloom seen set only)
+                                  links/          (per-round append)
+                                  items/          (per-round append)
+                                  fetch_log/      (per-round append)
+
+``vacuum`` deletes the full-rewrite tables of rounds older than the ones
+it protects; the append tables and every manifest stay.
 """
 
 from __future__ import annotations
@@ -31,22 +38,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-APPEND_TABLES = ("links", "items", "fetch_log")
-
-# merge-on-read frontier delta tables (cfg.frontier_mode="mor"): instead of
-# rewriting every frontier row per round (COW), a round appends
-#   frontier_updates  (url, status, fetched_round, attempt, upd_round)
-#       — ABSOLUTE post-state of rows claimed/denied this round
-#   frontier_children (full frontier schema, all status='new')
-#   frontier_inlinks  (url, inlink_delta) — additive rediscovery counts
-# and readers resolve latest-wins per url over the last full base
-# (manifest key "frontier_base"). Iceberg equivalent: MERGE in
-# merge-on-read mode (equality deletes + inserts), with
-# rewrite_data_files as the compaction. At the 10^10 design point this
-# turns the per-round write volume from O(|frontier|) into
-# O(|claimed| + |children|).
-MOR_TABLES = ("frontier_updates", "frontier_children", "frontier_inlinks")
-
 
 def _round_dir(workdir: str | Path, round_no: int) -> Path:
     return Path(workdir) / "snapshots" / f"round_{round_no:05d}"
@@ -54,8 +45,7 @@ def _round_dir(workdir: str | Path, round_no: int) -> Path:
 
 def write_snapshot(
     workdir: str | Path, round_no: int, tables: dict[str, DataFrame],
-    stats: dict | None = None, partition_by: dict[str, list[str]] | None = None,
-    stats_fn=None, frontier_base: int | None = None,
+    partition_by: dict[str, list[str]] | None = None, stats_fn=None,
 ) -> None:
     """``partition_by`` maps table name → hive partition columns (D5): the
     crawl loop writes the frontier partitioned by ``status``, so the next
@@ -84,12 +74,8 @@ def write_snapshot(
 
     with ThreadPoolExecutor(max_workers=max(1, len(tables))) as pool:
         list(pool.map(write_one, tables.items()))
-    stats = dict(stats or {})
-    if stats_fn is not None:
-        stats.update(stats_fn())
+    stats = stats_fn() if stats_fn is not None else {}
     manifest = {"round": round_no, "tables": sorted(tables), "stats": stats}
-    if frontier_base is not None:
-        manifest["frontier_base"] = frontier_base
     tmp = rdir / "manifest.json.tmp"
     tmp.write_text(json.dumps(manifest, indent=1))
     tmp.rename(rdir / "manifest.json")  # commit point
@@ -139,51 +125,6 @@ def read_items_latest(spark: SparkSession, workdir: str | Path) -> DataFrame | N
     return items.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
 
 
-def frontier_base_round(workdir: str | Path, round_no: int) -> int:
-    """The round whose snapshot holds the last FULL frontier at/under
-    ``round_no`` (= ``round_no`` itself for cow snapshots and mor
-    compaction rounds)."""
-    m = read_manifest(workdir, round_no)
-    if m is None:
-        raise FileNotFoundError(f"no manifest for round {round_no}")
-    if "frontier" in m.get("tables", []):
-        return round_no
-    base = m.get("frontier_base")
-    if base is None:
-        # a vacuumed COW round: its full frontier was GC'd and, being COW,
-        # it never had a base pointer — fail with the real story instead
-        # of a bare KeyError
-        raise FileNotFoundError(
-            f"round {round_no}: snapshot holds no frontier table and no "
-            f"frontier_base pointer (vacuumed cow round?) — state at this "
-            f"round is no longer recoverable"
-        )
-    return int(base)
-
-
-def _mor_parts(
-    spark: SparkSession, workdir: str | Path, round_no: int
-) -> tuple[DataFrame, DataFrame | None, DataFrame | None, DataFrame | None]:
-    """(base, updates, children, inlinks) for resolving the frontier as of
-    ``round_no``: base = last full frontier ≤ round_no; the deltas are the
-    union of all committed delta files in (base, round_no]."""
-    b = frontier_base_round(workdir, round_no)
-    base = read_table(spark, workdir, b, "frontier")
-    paths: dict[str, list[str]] = {name: [] for name in MOR_TABLES}
-    for r in range(b + 1, round_no + 1):
-        rdir = _round_dir(workdir, r)
-        for name in MOR_TABLES:
-            if (rdir / name).exists():
-                paths[name].append(str(rdir / name))
-    read = lambda ps: spark.read.parquet(*ps) if ps else None  # noqa: E731
-    return (
-        base,
-        read(paths["frontier_updates"]),
-        read(paths["frontier_children"]),
-        read(paths["frontier_inlinks"]),
-    )
-
-
 FRONTIER_COLS = (
     "url", "url_md5", "url_hash", "host", "depth", "status",
     "discovered_round", "fetched_round", "discovered_seq", "inlink_count",
@@ -191,110 +132,33 @@ FRONTIER_COLS = (
 )
 
 
-def resolve_frontier(
-    base: DataFrame,
-    updates: DataFrame | None,
-    children: DataFrame | None,
-    inlinks: DataFrame | None,
-) -> DataFrame:
-    """Latest-wins merge of delta tables over a full-frontier base — the
-    mor read path. A url appears at most once per round in ``updates``
-    (the frontier is unique by url and pop claims each url once), so the
-    max-by-upd_round struct picks a unique latest version; rows the crawl
-    touched were always status='new' beforehand, which is why the absolute
-    stored post-state composes with plain coalesce."""
-    full = base if children is None else base.unionByName(children)
-    if updates is not None:
-        latest = updates.groupBy("url").agg(
-            F.max(F.struct("upd_round", "status", "fetched_round", "attempt")).alias("_u")
-        )
-        full = full.join(latest, "url", "left").select(
-            *[
-                c for c in FRONTIER_COLS
-                if c not in ("status", "fetched_round", "attempt")
-            ],
-            F.coalesce(F.col("_u.status"), F.col("status")).alias("status"),
-            F.coalesce(F.col("_u.fetched_round"), F.col("fetched_round")).alias("fetched_round"),
-            F.coalesce(F.col("_u.attempt"), F.col("attempt")).alias("attempt"),
-        )
-    if inlinks is not None:
-        isum = inlinks.groupBy("url").agg(F.sum("inlink_delta").alias("_inl"))
-        full = (
-            full.join(isum, "url", "left")
-            .withColumn(
-                "inlink_count",
-                F.col("inlink_count") + F.coalesce(F.col("_inl"), F.lit(0)),
-            )
-            .drop("_inl")
-        )
-    return full.select(*FRONTIER_COLS)
-
-
 def read_frontier_resolved(spark: SparkSession, workdir: str | Path, round_no: int) -> DataFrame:
-    """Full frontier as of ``round_no`` under either mode (mor resolve, or
-    the plain table when the snapshot carries one)."""
-    if frontier_base_round(workdir, round_no) == round_no:
-        # normalize column order: a status-partitioned parquet read appends
-        # the partition column last
-        return read_table(spark, workdir, round_no, "frontier").select(*FRONTIER_COLS)
-    return resolve_frontier(*_mor_parts(spark, workdir, round_no))
-
-
-def read_frontier_new(spark: SparkSession, workdir: str | Path, round_no: int) -> DataFrame:
-    """Resolved ``status='new'`` rows as of ``round_no`` — the mor
-    scheduling read. Scans only the base's ``status=new`` hive partition
-    (pruned) plus the children deltas; terminal statuses never return to
-    'new', so rows outside those sources cannot be 'new' now."""
-    base, updates, children, inlinks = _mor_parts(spark, workdir, round_no)
-    cand = base.where(F.col("status") == "new")
-    resolved = resolve_frontier(cand, updates, children, inlinks)
-    return resolved.where(F.col("status") == "new")
-
-
-def read_frontier_urls(spark: SparkSession, workdir: str | Path, round_no: int) -> DataFrame:
-    """(url, url_hash) for EVERY frontier row as of ``round_no`` — the
-    first-wins dedup side. Updates never introduce urls, so this is a
-    2-column pruned scan of base ∪ children; no resolution join at all."""
-    base, _updates, children, _inlinks = _mor_parts(spark, workdir, round_no)
-    urls = base.select("url", "url_hash")
-    if children is not None:
-        urls = urls.unionByName(children.select("url", "url_hash"))
-    return urls
-
-
-def resolve_with_pending(
-    spark: SparkSession, workdir: str | Path, prev_round: int,
-    updates: DataFrame | None, children: DataFrame | None,
-    inlinks: DataFrame | None,
-) -> DataFrame:
-    """Full frontier = committed state as of ``prev_round`` + this round's
-    not-yet-committed delta DataFrames — the mor compaction input (the new
-    base is written in the same snapshot as the deltas that triggered it,
-    manifest still the single commit point)."""
-    base, upd0, chil0, inl0 = _mor_parts(spark, workdir, prev_round)
-
-    def cat(a: DataFrame | None, b: DataFrame | None) -> DataFrame | None:
-        if a is None:
-            return b
-        if b is None:
-            return a
-        return a.unionByName(b)
-
-    return resolve_frontier(base, cat(upd0, updates), cat(chil0, children), cat(inl0, inlinks))
+    """The full frontier as of ``round_no``, in ``FRONTIER_COLS`` order (a
+    status-partitioned parquet read appends the partition column last).
+    A round that ``vacuum`` stripped has no frontier left to read."""
+    m = read_manifest(workdir, round_no)
+    if m is None:
+        raise FileNotFoundError(f"no manifest for round {round_no}")
+    if "frontier" not in m.get("tables", []):
+        raise FileNotFoundError(
+            f"round {round_no}: snapshot holds no frontier table (vacuumed "
+            f"round?) — state at this round is no longer recoverable"
+        )
+    return read_table(spark, workdir, round_no, "frontier").select(*FRONTIER_COLS)
 
 
 def vacuum(workdir: str | Path, keep: int = 2) -> dict:
     """Snapshot retention GC — the Iceberg ``expireSnapshots`` analog.
 
-    A long crawl accretes one snapshot per round; the frontier copies in
-    old rounds (full COW rewrites, or superseded MOR deltas) dominate the
-    footprint while only the last few rounds are ever read again. Vacuum
-    deletes superseded FRONTIER data strictly older than every base round
-    any of the newest ``keep`` snapshots resolve against, and never
-    touches the append-only history tables (links/items/fetch_log — they
-    are the crawl's output, read as a union across all rounds) or the
-    manifests (each edited in place to drop the deleted tables, so reads
-    of a vacuumed round fail fast on the manifest, not mid-scan).
+    A long crawl accretes one snapshot per round; the full frontier copy
+    in every old round dominates the footprint while only the last few
+    rounds are ever read again. Vacuum keeps the newest ``keep`` rounds
+    and deletes the frontier and seen_segments tables of every round
+    older than the oldest of them. It never touches the append-only
+    history tables (links/items/fetch_log — they are the crawl's output,
+    read as a union across all rounds) or the manifests (each edited in
+    place to drop the deleted tables, so ``read_frontier_resolved`` on a
+    vacuumed round fails fast on the manifest, not mid-scan).
 
     Driver-side metadata walk only — no Spark job; safe while no writer
     is active (same discipline as Iceberg's expire)."""
@@ -309,8 +173,7 @@ def vacuum(workdir: str | Path, keep: int = 2) -> dict:
         for d in snaps.iterdir()
         if d.name.startswith("round_") and (d / "manifest.json").exists()
     )
-    protected = [r for r in rounds if r > latest - keep] or rounds[-1:]
-    cutoff = min(frontier_base_round(workdir, r) for r in protected)
+    cutoff = min([r for r in rounds if r > latest - keep] or rounds[-1:])
     deleted, freed = 0, 0
     for r in rounds:
         if r >= cutoff:
@@ -322,8 +185,7 @@ def vacuum(workdir: str | Path, keep: int = 2) -> dict:
         # loaded, so superseded copies below the cutoff are dead weight —
         # at the 10^10 design point ~12 GB per round of it
         doomed = [
-            t for t in ("frontier", "seen_segments", *MOR_TABLES)
-            if (rd / t).exists()
+            t for t in ("frontier", "seen_segments") if (rd / t).exists()
         ]
         for t in doomed:
             freed += sum(f.stat().st_size for f in (rd / t).rglob("*") if f.is_file())

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import gzip
 import io
+from datetime import datetime, timedelta, timezone
 from typing import Iterator
 
 import pandas as pd
@@ -78,23 +79,18 @@ def _record_bytes(
     return CRLF.join(lines).encode("utf-8") + payload + CRLF.encode() * 2
 
 
-def _warc_ts(dt) -> str:
-    """WARC-Date from a row timestamp, as the TRUE UTC instant with
-    microseconds. Both Arrow batches (naive datetime64 in the session
-    timezone) and `.rdd` rows (datetime.fromtimestamp, executor-OS-local)
-    render TimestampType as naive wall time, so formatting it directly
-    with a 'Z' suffix shifted every instant by the host's UTC offset
-    (probe-confirmed on a non-UTC host); astimezone(utc) on the
-    naive-local value recovers the instant. Second-truncation also broke
-    the documented lossless (url, warc_ts) reconstruction join for
-    sub-second fetch times. pandas Timestamps refuse astimezone on naive
-    values, so drop to a stdlib datetime first (assumes-local, matching
-    the session default timezone on the same host)."""
-    from datetime import timezone
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
-    if hasattr(dt, "to_pydatetime"):
-        dt = dt.to_pydatetime()
-    return dt.astimezone(timezone.utc).strftime("%Y-%m-%dT%H:%M:%S.%fZ")
+
+def _warc_ts(us) -> str:
+    """WARC-Date from ``unix_micros(ts)``, as the UTC instant with
+    microseconds. The writers carry timestamps through the plan as epoch
+    microseconds because Arrow batches render TimestampType as naive wall
+    time in the session timezone, and any local-time conversion of that
+    value depends on the executor's OS timezone. Integer arithmetic keeps
+    sub-second fetch times exact for the (url, warc_ts) reconstruction
+    join."""
+    return (_EPOCH + timedelta(microseconds=int(us))).strftime("%Y-%m-%dT%H:%M:%S.%fZ")
 
 
 def serialize_warc(rows: Iterator[tuple]) -> bytes:
@@ -169,7 +165,7 @@ def write_warc(
     # ONE pass serves both the write and the partition count: each task
     # yields a single summary row, so collect() sizes with the partition
     # count, never the data, and the plan executes exactly once.
-    summary = (df.select(url_col, ts_col, text_col)
+    summary = (df.select(url_col, F.unix_micros(ts_col).alias(ts_col), text_col)
                .mapInPandas(_write, "part_id int, n_records long")
                .collect())
     return len(summary)
@@ -343,8 +339,9 @@ def write_warc_deduped(
         yield pd.DataFrame({"part_id": [pid], "n_records": [n]})
 
     # one pass for both the write and the partition count — see write_warc
-    summary = (seen.select(url_col, ts_col, text_col, "digest",
-                           "is_first_seen", "dup_of_url", "dup_of_ts")
+    summary = (seen.select(url_col, F.unix_micros(ts_col).alias(ts_col), text_col,
+                           "digest", "is_first_seen", "dup_of_url",
+                           F.unix_micros("dup_of_ts").alias("dup_of_ts"))
                .mapInPandas(_write, "part_id int, n_records long")
                .collect())
     return len(summary)

@@ -237,6 +237,73 @@ def test_jpeg_pixel_cap_guard():
         ic.jpeg_decode(b)
 
 
+def _split_jpeg(data: bytes) -> tuple[list[tuple[int, bytes]], bytes]:
+    """(marker segments up to and including the first SOS, that scan's
+    entropy-coded bytes) of a single-scan file that ends in EOI."""
+    segs, i = [], 2
+    while True:
+        m = data[i + 1]
+        ln = struct.unpack(">H", data[i + 2 : i + 4])[0]
+        segs.append((m, data[i : i + 2 + ln]))
+        i += 2 + ln
+        if m == 0xDA:
+            return segs, data[i:-2]
+
+
+def _three_scan_jpeg(img: np.ndarray, quality: int = 90) -> tuple[bytes, list[bytes]]:
+    """A legal 4:4:4 baseline JPEG with one NON-interleaved scan per
+    component (Y, Cb, Cr), assembled from three grayscale encodes of the
+    YCbCr planes — they share the luma quant and huffman tables, and a
+    1x1-sampled component's block grid is the grayscale one. Returns the
+    file and the three single-plane files."""
+    ycc = ic._rgb_to_ycbcr(img)
+    planes = [ic.jpeg_encode(np.clip(np.round(ycc[:, :, c]), 0, 255).astype(np.uint8),
+                             quality=quality) for c in range(3)]
+    segs, _ = _split_jpeg(planes[0])
+    h, w = img.shape[:2]
+    out = bytearray(b"\xff\xd8")
+    out += b"".join(seg for m, seg in segs if m in (0xDB, 0xC4))
+    out += b"\xff\xc0" + struct.pack(">H", 17) + b"\x08" + struct.pack(">HH", h, w)
+    out += b"\x03" + b"".join(bytes([cid, 0x11, 0]) for cid in (1, 2, 3))
+    for cid, plane in zip((1, 2, 3), planes):
+        out += b"\xff\xda" + struct.pack(">H", 8) + bytes([1, cid, 0x00, 0, 63, 0])
+        out += _split_jpeg(plane)[1]
+    return bytes(out) + b"\xff\xd9", planes
+
+
+def test_jpeg_non_interleaved_scans_decode_every_component():
+    """One scan per component: every SOS is decoded, so chroma survives
+    (stopping after the first scan would return luma with flat chroma)."""
+    yy, xx = np.mgrid[0:19, 0:27]
+    img = np.stack([xx * 9, yy * 13, 255 - xx * 9], axis=-1).astype(np.uint8)
+    data, planes = _three_scan_jpeg(img)
+    got = ic.jpeg_decode(data)
+    y, cb, cr = (ic.jpeg_decode(p).astype(np.float64) for p in planes)
+    assert np.array_equal(got, ic._ycbcr_to_rgb(y, cb, cr))
+    assert np.abs(got.astype(int) - img.astype(int)).mean() < 4
+
+
+def test_jpeg_uncovered_component_raises():
+    img = np.full((16, 16, 3), 90, dtype=np.uint8)
+    data, _ = _three_scan_jpeg(img)
+    first_scan_end = data.find(b"\xff\xda", data.find(b"\xff\xda") + 2)
+    with pytest.raises(ValueError, match=r"components \[2, 3\] undecoded"):
+        ic.jpeg_decode(data[:first_scan_end] + b"\xff\xd9")
+
+
+@pytest.mark.parametrize("keep,msg", [
+    (lambda m, seg: m != 0xC4, "missing DC huffman table 0"),
+    # keep the DC table (class 0), drop the AC one (class 1)
+    (lambda m, seg: not (m == 0xC4 and seg[4] >> 4 == 1), "missing AC huffman table 0"),
+    (lambda m, seg: m != 0xDB, "missing quantization table 0"),
+], ids=["dc", "ac", "quant"])
+def test_jpeg_missing_table_raises_value_error(keep, msg):
+    segs, entropy = _split_jpeg(ic.jpeg_encode(np.full((8, 8), 50, np.uint8)))
+    data = b"\xff\xd8" + b"".join(seg for m, seg in segs if keep(m, seg))
+    with pytest.raises(ValueError, match=msg):
+        ic.jpeg_decode(data + entropy + b"\xff\xd9")
+
+
 def test_decode_pixels_cap_for_png():
     # IHDR claiming a huge raster trips the cap without inflating IDAT.
     huge = ic.png_encode(np.zeros((4, 4), np.uint8))

@@ -1323,3 +1323,64 @@ def test_warc_writer_output_is_bit_reproducible(spark, docs, tmp_path):
     # FNAME flag (bit 3 of FLG, header byte 3) must be clear in every member
     first = open(os.path.join(d1, sorted(os.listdir(d1))[0]), "rb").read()
     assert first[3] & 0x08 == 0
+
+
+_WARC_TZ_SCRIPT = r"""
+import glob, gzip, json, sys, time
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import functions as F
+from spider_spark import warc
+from spider_spark.session import get_spark
+
+spark = get_spark(master="local[1]", shuffle_partitions=1,
+                  extra_conf={"spark.driver.memory": "1g"})
+src = spark.createDataFrame(
+    [("https://h/a", "2026-02-01 00:00:00.123456", "same"),
+     ("https://h/b", "2026-07-01 12:34:56.000001", "same"),
+     ("https://h/c", "2026-07-01 23:59:59", "other")],
+    "url string, ts string, payload string",
+).select("url", F.to_timestamp("ts").alias("warc_ts"), "payload")
+fmt = lambda df: sorted(
+    (r[0], r[1]) for r in df.select(
+        "url", F.date_format("warc_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")).collect())
+out = {"gmtoff": time.localtime().tm_gmtoff, "src": fmt(src)}
+for name, write in (("plain", warc.write_warc), ("dedup", warc.write_warc_deduped)):
+    d = f"{sys.argv[2]}/{name}"
+    write(src, d)
+    out[name] = fmt(warc.read_warc(spark, f"{d}/*.warc.gz"))
+    out[name + "_refers"] = sorted(
+        line.split(": ", 1)[1]
+        for f in glob.glob(f"{d}/*.warc.gz")
+        for line in gzip.decompress(open(f, "rb").read()).decode().split("\r\n")
+        if line.startswith("WARC-Refers-To-Date:"))
+spark.stop()
+print(json.dumps(out))
+"""
+
+
+def test_warc_ts_independent_of_host_timezone(tmp_path):
+    """WARC-Date is the UTC instant whatever the OS timezone: a Spark run
+    under TZ=America/New_York round-trips (url, warc_ts) exactly through
+    both writers, and a revisit record's WARC-Refers-To-Date is the
+    referent's UTC capture time."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    env = dict(os.environ, TZ="America/New_York")
+    proc = subprocess.run(
+        [sys.executable, "-c", _WARC_TZ_SCRIPT, repo, str(tmp_path)],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["gmtoff"] != 0  # the child really ran off UTC
+    src = [tuple(r) for r in out["src"]]
+    assert src[0] == ("https://h/a", "2026-02-01 00:00:00.123456")
+    assert [tuple(r) for r in out["plain"]] == src
+    assert [tuple(r) for r in out["dedup"]] == src
+    assert out["plain_refers"] == []
+    assert out["dedup_refers"] == ["2026-02-01T00:00:00.123456Z"]

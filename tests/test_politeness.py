@@ -220,7 +220,7 @@ def test_malformed_href_does_not_crash_round(spark, tmp_path):
 def test_max_urls_per_host_trap_guard(spark, fixture, tmp_path):
     """Cumulative per-host admission cap: no host's frontier ever exceeds
     max(cap, its seed count); capped crawl admits strictly fewer rows than
-    the uncapped one; mor mode agrees with cow."""
+    the uncapped one."""
     pages_pd, pages, seeds = fixture
     policy = spark.createDataFrame(corpus.make_host_policy(pages_pd))
     cap = 3
@@ -231,24 +231,19 @@ def test_max_urls_per_host_trap_guard(spark, fixture, tmp_path):
         spark, tmp_path / "free", tables.latest_round(tmp_path / "free"), "frontier"
     )
 
-    totals = {}
-    for mode in ("cow", "mor"):
-        wd = tmp_path / f"cap_{mode}"
-        crawl(spark, wd, pages, seeds, policy,
-              CrawlConfig(max_depth=3, max_rounds=8, max_urls_per_host=cap,
-                          frontier_mode=mode))
-        fr = tables.read_frontier_resolved(spark, wd, tables.latest_round(wd))
-        per_host = {r["host"]: r["n"] for r in
-                    fr.groupBy("host").agg(F.count(F.lit(1)).alias("n")).collect()}
-        seed_hosts = {}
-        for u, _ in seeds:
-            h = u.split("/")[2]
-            seed_hosts[h] = seed_hosts.get(h, 0) + 1
-        for h, n in per_host.items():
-            assert n <= max(cap, seed_hosts.get(h, 0)), (mode, h, n)
-        totals[mode] = fr.count()
-        assert totals[mode] < free.count()
-    assert totals["cow"] == totals["mor"]
+    wd = tmp_path / "cap"
+    crawl(spark, wd, pages, seeds, policy,
+          CrawlConfig(max_depth=3, max_rounds=8, max_urls_per_host=cap))
+    fr = tables.read_frontier_resolved(spark, wd, tables.latest_round(wd))
+    per_host = {r["host"]: r["n"] for r in
+                fr.groupBy("host").agg(F.count(F.lit(1)).alias("n")).collect()}
+    seed_hosts = {}
+    for u, _ in seeds:
+        h = u.split("/")[2]
+        seed_hosts[h] = seed_hosts.get(h, 0) + 1
+    for h, n in per_host.items():
+        assert n <= max(cap, seed_hosts.get(h, 0)), (h, n)
+    assert fr.count() < free.count()
 
 
 def test_trap_shape_guard_rejects_trap_children(spark, tmp_path):
