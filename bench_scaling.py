@@ -1,22 +1,14 @@
-"""Scaling-efficiency evidence (BASELINE.json north_rule).
+"""One crawl-loop throughput point at N cores:
 
-The rule demands ≥0.8 throughput scaling efficiency moving from N to 4N
-executors. This sandbox has one machine, so the sanctioned substitute
-(SURVEY.md §6) is the identical crawl job at two parallelism levels:
+    python bench_scaling.py 4      # local[4]
 
-    python bench_scaling.py 8      # local[8]
-    python bench_scaling.py 32     # local[32]
-
-Each run prints one JSON line {cpus, pages, urls_done, seconds,
-urls_per_sec}; efficiency = tput_4N / (4 · tput_N).
+Prints one JSON line {cpus, pages, urls_done, seconds, urls_per_sec}.
 
 Measured config levers (round 2): shuffle partitions default to 3× cores
 (BENCH_SHUFFLE_MULT) — finer tasks smooth host-steal stragglers at stage
-barriers, −23%% wall at 8 cores on this VM; run with
-SPARK_LOCAL_DIRS=/dev/shm/... TMPDIR=/dev/shm/... to take the shared
-~350 MB/s /tmp disk out of shuffle+snapshot IO (−25%%). Record the
-pure-CPU control (sha256 burn) next to every pair — host ceilings on this
-box swing between 0.75 and 0.94 across sessions.
+barriers, −23% wall at 8 cores on a shared 32-core VM; run with
+SPARK_LOCAL_DIRS=/dev/shm/... TMPDIR=/dev/shm/... to take a slow shared
+/tmp disk out of shuffle+snapshot IO (−25%).
 
 The corpus is generated IN SPARK (spark.range — no driver-side loop) so the
 workload is round-dominated, not setup-dominated: BENCH_PAGES pages across
@@ -84,11 +76,11 @@ def synth_pages(spark, n_pages: int, n_hosts: int):
 
 
 def run_bench(spark) -> dict:
-    """The measured unit, shared with bench_cluster.py: build the
-    Spark-generated corpus (excluded), run BENCH_ROUNDS rounds of frontier
-    work (measured), return {pages, seeds, rounds, urls_done, seconds,
-    urls_per_sec}. Workload parameters come from the BENCH_* env vars so
-    every parallelism level of a pair runs literally identical code+input."""
+    """The measured unit: build the Spark-generated corpus (excluded), run
+    BENCH_ROUNDS rounds of frontier work (measured), return {pages, seeds,
+    rounds, urls_done, seconds, urls_per_sec}. Workload parameters come
+    from the BENCH_* env vars, so every run at any core count executes
+    identical code and input."""
     n_pages = int(os.environ.get("BENCH_PAGES", "300000"))
     n_hosts = int(os.environ.get("BENCH_HOSTS", "2000"))
     n_seeds = int(os.environ.get("BENCH_SEEDS", "30000"))

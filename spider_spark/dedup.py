@@ -1,13 +1,21 @@
 """Deduplication suite for the large-scale training-data tier.
 
-Five strategies over a ``documents(doc_id, text, …)`` table, each returning
+Strategies over a ``documents(doc_id, text, …)`` table, each returning
 duplicate *pairs* (a_id < b_id) or canonical-survivor assignments:
 
 - exact:       hash-groupBy on md5(text)                — one shuffle
-- n-gram Jaccard: shingle self-join, exact similarity   — shuffle on shingle
+- n-gram Jaccard / containment: exact set overlap       — shuffle on shingle
 - MinHash+LSH: signature → band buckets → candidate join → exact verify
 - SimHash:     60-bit sketch, banded hamming join       — pigeonhole blocking
 - embedding:   cosine threshold over array<float>       — bucketed by LSH
+
+One set-overlap core serves every exact shingle measure: ``set_overlap``
+turns (doc_id, shingle) rows into (a_id, b_id, inter, na, nb), either by a
+self-join on the shingle or pair-first over an LSH candidate list, and
+``_cap_hot`` is its hot-key cap. ``jaccard_pairs`` and
+``containment_pairs`` are threshold predicates over it, and
+``webindex.mirror_host_pairs`` runs it with hosts as docs and page digests
+as shingles.
 
 Scale: the pairwise joins never go quadratic — they join on shingle /
 band-bucket / simhash-chunk, so only genuinely-colliding docs pair up.
@@ -20,7 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from spider_spark import textops
@@ -41,7 +49,7 @@ def exact_dupes(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-# ---------------------------------------------------------- n-gram jaccard
+# ----------------------------------------------------------------- shingles
 def shingle_table(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
     toks = docs.select(
@@ -53,36 +61,99 @@ def shingle_table(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
 
 
 def shingle_rows(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
-                 text_col: str = "text", max_df: int | None = None,
-                 keep_empty: bool = False) -> DataFrame:
+                 text_col: str = "text", max_df: int | None = None) -> DataFrame:
     """Exploded (doc_id, shingle) rows, df-capped, repartitioned by doc —
     the SHARED corpus pass behind the LSH pipelines: candidate generation
     and exact verification both consume this one table (persist it at the
     call site), so the corpus is tokenized, shingled, and df-capped ONCE
     instead of once per stage — at 100 TB that is a whole corpus scan
     saved, and the doc_id partitioning serves both the signature
-    aggregation and the verify joins.
-
-    keep_empty retains one null-shingle sentinel row per shingle-less doc
-    (explode_outer) so the signature path sees every doc; exact-verify
-    consumers must filter `shingle IS NOT NULL` (jaccard_pairs /
-    containment_pairs do when handed a prebuilt table)."""
+    aggregation and the verify joins. A shingle-less doc has no rows."""
     n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     toks = docs.repartition(n_part, F.col(id_col)).select(
         F.col(id_col).alias("doc_id"), textops.tokens_col(F.col(text_col)).alias("toks")
     )
     grams = toks.select("doc_id", textops.grams_col(F.col("toks"), n).alias("grams"))
-    explode = F.explode_outer if keep_empty else F.explode
-    ex = grams.select("doc_id", explode("grams").alias("shingle"))
-    if max_df is not None:
-        hot = (
-            ex.groupBy("shingle").agg(F.count_distinct("doc_id").alias("df"))
-            .where(F.col("df") > max_df).select("shingle")
+    return _cap_hot(grams.select("doc_id", F.explode("grams").alias("shingle")), max_df)
+
+
+# --------------------------------------------------------- set-overlap core
+def _cap_hot(rows: DataFrame, max_df: int | None) -> DataFrame:
+    """Drop keys held by more than max_df distinct ids from (doc_id,
+    shingle) rows — the standard MinHash vocabulary cap. A stop-gram shared
+    by half the corpus otherwise contributes ~(corpus/2)² self-join rows on
+    its own; the cap bounds per-key fan-out at max_df² and leaves any
+    corpus without hot keys untouched. None: no cap."""
+    if max_df is None:
+        return rows
+    hot = (
+        rows.groupBy("shingle").agg(F.count_distinct("doc_id").alias("df"))
+        .where(F.col("df") > max_df).select("shingle")
+    )
+    return rows.join(F.broadcast(hot), "shingle", "left_anti")
+
+
+def set_overlap(rows: DataFrame, restrict_pairs: DataFrame | None = None) -> DataFrame:
+    """The one set-overlap self-join behind jaccard_pairs,
+    containment_pairs and webindex.mirror_host_pairs: over a set of
+    (doc_id, shingle) rows, returns (a_id, b_id, inter, na, nb) with
+    a_id < b_id for every pair sharing ≥1 shingle, where inter =
+    |S(a) ∩ S(b)| and na, nb = |S(a)|, |S(b)|.
+
+    Each row carries its set size (a window count per doc), so both sizes
+    ride through the join into the pair groupBy: the rows are referenced
+    twice, not once per size join — a reference re-derives the whole
+    shingle lineage (lambda expressions defeat exchange reuse).
+
+    Full plan: self-join keyed on shingle, so only docs sharing a shingle
+    pair up — never the cross product — and each unordered pair is joined
+    once (a < b), then one groupBy(a, b).
+
+    restrict_pairs (a_id, b_id — unordered, duplicates allowed): only these
+    pairs are scored, and only their docs' rows are kept (semi-join before
+    anything else; that slice is persisted, as it feeds both join sides).
+    PAIR-FIRST intersection: attach each pair's a-side shingle set, then
+    match the b side on (b_id, shingle). Work is Σ_pairs |S(a)| — linear
+    in the candidate list — whereas the shingle self-join costs
+    Σ_shingle df² over candidate DOCS, which re-creates the quadratic
+    hot-shingle blowup whenever LSH names most of the corpus in *some*
+    pair (boilerplate webtext: nearly every doc is in ≥1 candidate pair
+    even though the pair list itself stays linear)."""
+    if restrict_pairs is not None:
+        cand_docs = (
+            restrict_pairs.select(F.col("a_id").alias("doc_id"))
+            .unionByName(restrict_pairs.select(F.col("b_id").alias("doc_id")))
+            .distinct()
         )
-        # left_anti on a null shingle keeps the row (the explode_outer
-        # empty-doc sentinel survives the cap)
-        ex = ex.join(F.broadcast(hot), "shingle", "left_anti")
-    return ex
+        rows = rows.join(cand_docs, "doc_id", "left_semi")
+    rows = rows.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
+    if restrict_pairs is not None:
+        rows = rows.persist()
+    a = rows.select(F.col("doc_id").alias("a_id"), "shingle", F.col("n").alias("na"))
+    b = rows.select(F.col("doc_id").alias("b_id"), "shingle", F.col("n").alias("nb"))
+    if restrict_pairs is None:
+        matched = a.join(b, "shingle").where(F.col("a_id") < F.col("b_id"))
+    else:
+        pairs = restrict_pairs.select(
+            F.least("a_id", "b_id").alias("a_id"),
+            F.greatest("a_id", "b_id").alias("b_id"),
+        ).distinct()
+        matched = pairs.join(a, "a_id").join(b, ["b_id", "shingle"])
+    return (
+        matched.groupBy("a_id", "b_id", "na", "nb")
+        .agg(F.count(F.lit(1)).alias("inter"))
+        .select("a_id", "b_id", "inter", "na", "nb")
+    )
+
+
+def _overlap(docs: DataFrame, n: int, id_col: str, text_col: str,
+             restrict_pairs: DataFrame | None, max_df: int | None,
+             shingles: DataFrame | None) -> DataFrame:
+    """set_overlap over docs' n-gram shingles, or over a prebuilt
+    shingle_rows table (already df-capped), which skips the corpus scan."""
+    if shingles is None:
+        shingles = _cap_hot(shingle_table(docs, n, id_col, text_col), max_df)
+    return set_overlap(shingles, restrict_pairs)
 
 
 def jaccard_pairs(docs: DataFrame, threshold: float, n: int = 3,
@@ -90,83 +161,23 @@ def jaccard_pairs(docs: DataFrame, threshold: float, n: int = 3,
                   restrict_pairs: DataFrame | None = None,
                   max_df: int | None = None,
                   shingles: DataFrame | None = None) -> DataFrame:
-    """Exact n-gram Jaccard ≥ threshold pairs via shingle self-join.
-    Returns (a_id, b_id, jaccard). Join key = shingle ⇒ candidate set is
-    docs sharing ≥1 shingle, not the full cross product.
+    """Exact n-gram Jaccard ≥ threshold pairs over set_overlap.
+    Returns (a_id, b_id, jaccard), a_id < b_id.
 
     restrict_pairs (a_id, b_id): only verify these pairs — the LSH-verify
-    path, where the shingle join runs on the (tiny) candidate doc set.
+    path (pair-first, see set_overlap).
 
     max_df: drop shingles appearing in more than max_df documents BEFORE
-    anything downstream (the standard MinHash vocabulary cap — similarity
-    is then Jaccard over the capped shingle space). A stop-gram shared by
-    half the corpus otherwise contributes ~(corpus/2)² candidate rows on
-    its own; the cap bounds per-shingle join fan-out at max_df² while
-    leaving discriminative shingles — and the result on any corpus with no
-    hot shingles — untouched (test_pipeline_ops exercises both claims).
+    anything downstream (_cap_hot — similarity is then Jaccard over the
+    capped shingle space); test_pipeline_ops pins that the cap drops a
+    hot stop-gram and is a no-op on a corpus without one.
 
     shingles: a prebuilt (doc_id, shingle) table (shingle_rows — already
-    df-capped, possibly carrying null empty-doc sentinels); skips the
-    corpus re-scan so the LSH pipelines shingle the corpus once."""
-    if shingles is not None:
-        sh = shingles.where(F.col("shingle").isNotNull())
-    else:
-        sh = shingle_table(docs, n, id_col, text_col)
-        if max_df is not None:
-            hot = (
-                sh.groupBy("shingle")
-                .agg(F.count_distinct("doc_id").alias("df"))
-                .where(F.col("df") > max_df)
-                .select("shingle")
-            )
-            sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sh_j = sh
-    if restrict_pairs is not None:
-        cand_docs = (
-            restrict_pairs.select(F.col("a_id").alias("doc_id"))
-            .unionByName(restrict_pairs.select(F.col("b_id").alias("doc_id")))
-            .distinct()
-        )
-        # only candidate docs ever need shingles OR sizes — the full corpus
-        # is never exploded on the verify path
-        sh_j = sh.join(cand_docs, "doc_id", "left_semi").persist()
-    sizes = sh_j.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    if restrict_pairs is not None:
-        # PAIR-FIRST intersection: attach each candidate pair's a-side
-        # shingle set, then match the b side on (b_id, shingle). Work is
-        # Σ_pairs |S(a)| — linear in the candidate list — whereas the
-        # shingle self-join below costs Σ_shingle df² over candidate DOCS,
-        # which re-creates the quadratic hot-shingle blowup whenever LSH
-        # recalls most of the corpus as *some* pair's member (boilerplate
-        # webtext at 100 TB: nearly every doc is in ≥1 candidate pair even
-        # though the pair list itself stays linear).
-        rp = restrict_pairs.select(
-            F.least("a_id", "b_id").alias("a_id"),
-            F.greatest("a_id", "b_id").alias("b_id"),
-        ).distinct()
-        pa = rp.join(sh_j.select(F.col("doc_id").alias("a_id"), "shingle"), "a_id")
-        inter = (
-            pa.join(
-                sh_j.select(F.col("doc_id").alias("b_id"), "shingle"),
-                ["b_id", "shingle"],
-            )
-            .groupBy("a_id", "b_id")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    else:
-        a = sh_j.select(F.col("doc_id").alias("a_id"), "shingle")
-        b = sh_j.select(F.col("doc_id").alias("b_id"), "shingle")
-        inter = (
-            a.join(b, "shingle")
-            .where(F.col("a_id") < F.col("b_id"))
-            .groupBy("a_id", "b_id")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb"))
+    df-capped); skips the corpus re-scan so the LSH pipelines shingle the
+    corpus once."""
+    ov = _overlap(docs, n, id_col, text_col, restrict_pairs, max_df, shingles)
     return (
-        inter.join(sa, "a_id").join(sb, "b_id")
-        .withColumn(
+        ov.withColumn(
             "jaccard",
             F.col("inter").cast("double")
             / (F.col("na") + F.col("nb") - F.col("inter")).cast("double"),
@@ -183,6 +194,7 @@ def containment_pairs(docs: DataFrame, threshold: float, n: int = 3,
                       shingles: DataFrame | None = None) -> DataFrame:
     """Asymmetric n-gram containment: pairs (a_id, b_id) where
     |S(a) ∩ S(b)| / |S(a)| ≥ threshold — "a is (nearly) contained in b".
+    Returns (a_id, b_id, containment), both directions.
 
     Containment is what Jaccard misses: a short page embedded verbatim in a
     long one (boilerplate templates, quoted articles, paginated supersets)
@@ -191,104 +203,26 @@ def containment_pairs(docs: DataFrame, threshold: float, n: int = 3,
     the original shingling paper, and the webtext-dedup use case is
     dropping pages subsumed by a larger capture.
 
-    Same shuffle shape as jaccard_pairs (shingle self-join — only docs
-    sharing a shingle pair up; one groupBy on (a,b)); emitted both
-    directions since containment is directional. Scale path
-    (containment_pairs_lsh): restrict the self-join to MinHash-LSH
-    candidates exactly as minhash_lsh_pairs does — containment ≥ t with
-    size ratio |B| ≤ r·|A| implies Jaccard ≥ t/(1+r−t), so LSH at that
-    lower band threshold still bounds the candidate set.
-
-    restrict_pairs (a_id, b_id — unordered; both orientations verified):
-    only these pairs are scored, and only their docs are ever shingled.
-
-    max_df: drop shingles appearing in more than max_df documents before
-    anything downstream (see jaccard_pairs — same cap, same rationale:
-    a boilerplate shingle shared by 10^6 docs is a 10^12-row join on its
-    own; the result on any corpus with no hot shingles is untouched).
-
-    shingles: a prebuilt (doc_id, shingle) table (shingle_rows — already
-    df-capped, possibly carrying null empty-doc sentinels); skips the
-    corpus re-scan so the LSH pipelines shingle the corpus once."""
-    if shingles is not None:
-        sh = shingles.where(F.col("shingle").isNotNull())
-    else:
-        sh = shingle_table(docs, n, id_col, text_col)
-        if max_df is not None:
-            hot = (
-                sh.groupBy("shingle")
-                .agg(F.count_distinct("doc_id").alias("df"))
-                .where(F.col("df") > max_df)
-                .select("shingle")
-            )
-            sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    if restrict_pairs is not None:
-        # sh's id column is ALWAYS 'doc_id' (shingle_table/shingle_rows
-        # rename) — referencing the caller's id_col here broke every
-        # non-default id_col call with an unresolved-column error
-        cand_docs = (
-            restrict_pairs.select(F.col("a_id").alias("doc_id"))
-            .unionByName(restrict_pairs.select(F.col("b_id").alias("doc_id")))
-            .distinct()
-        )
-        sh = sh.join(cand_docs, "doc_id", "left_semi").persist()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    if restrict_pairs is not None:
-        # PAIR-FIRST intersection (see jaccard_pairs): candidates are
-        # unordered, so normalize to a<b (both directions re-emerge from
-        # the explode below), attach the a-side shingle set per pair, and
-        # match the b side on (b_id, shingle). Σ_pairs |S(a)| work — the
-        # candidate-doc shingle self-join this replaces re-created the
-        # quadratic hot-shingle blowup whenever LSH names most docs in
-        # ≥1 pair (every subsumed page does exactly that).
-        norm = restrict_pairs.select(
-            F.least("a_id", "b_id").alias("a_id"),
-            F.greatest("a_id", "b_id").alias("b_id"),
-        ).distinct()
-        pa = norm.join(sh.select(F.col("doc_id").alias("a_id"), "shingle"), "a_id")
-        inter_lt = (
-            pa.join(
-                sh.select(F.col("doc_id").alias("b_id"), "shingle"),
-                ["b_id", "shingle"],
-            )
-            .groupBy("a_id", "b_id")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    else:
-        a = sh.select(F.col("doc_id").alias("a_id"), "shingle")
-        b = sh.select(F.col("doc_id").alias("b_id"), "shingle")
-        # |S(a) ∩ S(b)| is symmetric: join each unordered pair ONCE (a < b)
-        # and emit the swapped direction afterwards — halves the join output
-        # vs an a ≠ b theta join (measured 12.4 s → ~7 s at sf0.1)
-        inter_lt = (
-            a.join(b, "shingle")
-            .where(F.col("a_id") < F.col("b_id"))
-            .groupBy("a_id", "b_id")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
+    Same set_overlap pass as jaccard_pairs: each unordered pair is joined
+    once and both directions are emitted from that one row. Scale path
+    (containment_pairs_lsh): restrict to MinHash-LSH candidates —
+    containment ≥ t with size ratio |B| ≤ r·|A| implies Jaccard ≥
+    t/(1+r−t), so LSH at that lower band threshold still bounds the
+    candidate set. restrict_pairs, max_df and shingles as jaccard_pairs."""
+    ov = _overlap(docs, n, id_col, text_col, restrict_pairs, max_df, shingles)
+    inter = F.col("inter").cast("double")
     # both directions from ONE pass: explode a 2-struct array rather than
     # union the swapped branch (a union re-executes the join lineage twice)
-    inter = inter_lt.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a_id"), F.col("b_id"), F.col("inter")),
-                F.struct(
-                    F.col("b_id").alias("a_id"),
-                    F.col("a_id").alias("b_id"),
-                    F.col("inter"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.a_id", "p.b_id", "p.inter")
-    sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"))
+    both = F.array(
+        F.struct(F.col("a_id"), F.col("b_id"),
+                 (inter / F.col("na").cast("double")).alias("containment")),
+        F.struct(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"),
+                 (inter / F.col("nb").cast("double")).alias("containment")),
+    )
     return (
-        inter.join(sa, "a_id")
-        .withColumn(
-            "containment",
-            F.col("inter").cast("double") / F.col("na").cast("double"),
-        )
+        ov.select(F.explode(both).alias("p"))
+        .select("p.a_id", "p.b_id", "p.containment")
         .where(F.col("containment") >= threshold)
-        .select("a_id", "b_id", "containment")
     )
 
 
@@ -403,42 +337,38 @@ def dedup_lines(
 
 
 # ------------------------------------------------------------- minhash+lsh
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    threshold: float = 0.9,
-    n: int = 3,
-    n_hashes: int = 128,
-    n_bands: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def _lsh_verify(pairs_fn, docs: DataFrame, threshold: float, n: int,
+                n_hashes: int, n_bands: int, id_col: str, text_col: str,
+                max_df: int | None = None) -> DataFrame:
+    """The LSH pipelines' shared body: shingle the corpus ONCE (persisted;
+    consumed by both candidate generation and the exact verify), take
+    MinHash band candidates, verify them exactly with pairs_fn (pair-first,
+    so the full-corpus shingle join — the work LSH exists to avoid — never
+    runs), then checkpoint the tiny verified pair set eagerly and RELEASE
+    the shingle/candidate caches: a per-batch driver (daily admissions)
+    would otherwise accumulate every run's cached tables until executors
+    spill."""
+    sh = shingle_rows(docs, n=n, id_col=id_col, text_col=text_col,
+                      max_df=max_df).persist()
+    cand = lsh_candidates(docs, n=n, n_hashes=n_hashes, n_bands=n_bands,
+                          id_col=id_col, text_col=text_col, shingles=sh)
+    out = pairs_fn(docs, threshold, n, id_col, text_col,
+                   restrict_pairs=cand, shingles=sh).localCheckpoint(eager=True)
+    cand.unpersist()
+    sh.unpersist()
+    return out
+
+
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.9, n: int = 3,
+                      id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """MinHash → LSH banding → candidate pairs → EXACT Jaccard verify.
 
     With 32 bands × 4 rows a true pair at j=threshold=0.9 escapes all bands
     with probability (1−0.9⁴)³² ≈ 1.5e-15 — the verified output equals the
     exact-Jaccard answer while the candidate join touches only band-bucket
-    collisions (the 10^10-doc path: ~n_bands rows per doc, shuffle on
-    band_key, never quadratic)."""
-    # One shared corpus pass: shingle_rows is persisted and consumed by
-    # BOTH candidate generation (signature backend notes on
-    # lsh_candidates) and the exact verify — the corpus is tokenized,
-    # shingled, and exploded once.
-    sh = shingle_rows(docs, n=n, id_col=id_col, text_col=text_col,
-                      keep_empty=True).persist()
-    cand = lsh_candidates(docs, n=n, n_hashes=n_hashes, n_bands=n_bands,
-                          id_col=id_col, text_col=text_col, shingles=sh)
-    # exact verify ONLY on candidate pairs — the full-corpus shingle join
-    # would redo the work LSH exists to avoid. The verified pair set is
-    # tiny; checkpoint it eagerly so the shingle/candidate caches can be
-    # RELEASED here — a per-batch driver (daily admissions) would
-    # otherwise accumulate every run's cached tables until executors
-    # spill (review finding: persisted intermediates were never freed).
-    out = jaccard_pairs(docs, threshold, n, id_col, text_col,
-                        restrict_pairs=cand, shingles=sh)
-    out = out.localCheckpoint(eager=True)
-    cand.unpersist()
-    sh.unpersist()
-    return out
+    collisions (the 10^10-doc path: 32 rows per doc, shuffle on band_key,
+    never quadratic)."""
+    return _lsh_verify(jaccard_pairs, docs, threshold, n, 128, 32, id_col, text_col)
 
 
 def _band_keys_udf(n_hashes: int, n_bands: int):
@@ -503,18 +433,13 @@ def band_buckets(docs: DataFrame, n: int = 3, n_hashes: int = 128,
     the bucket self-join."""
     rows_per_band = n_hashes // n_bands
     if shingles is not None:
-        # prebuilt shingle_rows table (df-capped, explode_outer sentinels)
-        ex = shingles
+        ex = shingles  # prebuilt shingle_rows table (already df-capped)
     else:
         ex = shingle_rows(docs, n=n, id_col=id_col, text_col=text_col,
-                          max_df=max_df, keep_empty=True)
-    # shingle-less docs (null sentinel) emit NO band rows: they have no
-    # min-hash, their similarity to anything under the shingle measure is
-    # 0, and a shared sentinel signature would funnel EVERY short/empty
-    # doc into one bucket per band — a quadratic candidate blowup in their
-    # count (10^5 empty bodies → ~10^10 candidate rows) that the exact
-    # verify then discards wholesale.
-    ex = ex.where(F.col("shingle").isNotNull())
+                          max_df=max_df)
+    # shingle-less docs have no rows, hence no band rows: a shared empty
+    # signature would put EVERY short/empty doc in one bucket per band — a
+    # quadratic candidate blowup that the exact verify then discards.
     # one string hash per shingle; permutations rehash the 8-byte long
     exh = ex.select("doc_id", F.xxhash64(F.col("shingle")).alias("h"))
     if n_hashes <= 96:
@@ -583,26 +508,6 @@ def lsh_candidates(docs: DataFrame, n: int = 3, n_hashes: int = 128,
     return cand
 
 
-def containment_lsh_bands(threshold: float, max_size_ratio: float,
-                          n_hashes: int = 128,
-                          target_recall: float = 0.999) -> int:
-    """Band count for containment-via-LSH: containment ≥ t with
-    |B| ≤ r·|A| implies Jaccard ≥ j_min = t/(1+r−t) (Broder), so bands
-    tuned for j_min catch every in-ratio pair. Picks the FEWEST bands
-    (most rows per band ⇒ fewest bucket collisions) whose miss
-    probability (1−j_min^rows)^bands stays under 1−target_recall."""
-    j_min = threshold / (1.0 + max_size_ratio - threshold)
-    best = n_hashes  # rows=1: P(catch) = 1-(1-j)^n_hashes, max recall
-    for rows in range(n_hashes, 0, -1):
-        if n_hashes % rows:
-            continue
-        bands = n_hashes // rows
-        if 1.0 - (1.0 - j_min ** rows) ** bands >= target_recall:
-            best = bands
-            break
-    return best
-
-
 def containment_lsh_config(threshold: float, max_size_ratio: float,
                            target_recall: float = 0.999,
                            max_hashes: int = 512,
@@ -653,8 +558,6 @@ def containment_lsh_config(threshold: float, max_size_ratio: float,
 
 def containment_pairs_lsh(docs: DataFrame, threshold: float, n: int = 3,
                           max_size_ratio: float = 8.0,
-                          n_hashes: int | None = None,
-                          n_bands: int | None = None,
                           id_col: str = "doc_id", text_col: str = "text",
                           max_df: int | None = None) -> DataFrame:
     """LSH-candidate-restricted containment — the 100 TB path the
@@ -665,31 +568,14 @@ def containment_pairs_lsh(docs: DataFrame, threshold: float, n: int = 3,
     self-join). Web boilerplate supersets (the Broder containment use
     case) live at small r; pairs beyond max_size_ratio carry no recall
     guarantee (raise r, or size-bucket, when hunting 100:1 subsumption).
-    Signature width and banding come from containment_lsh_config unless
-    pinned explicitly — see its docstring for the rows≥2 rationale."""
-    if n_hashes is None and n_bands is None:
-        # rows≥2 floor even under a df cap: measured at sf0.1 the rows=1
-        # config admits 761k candidates vs rows=2's 43k on the same corpus
-        # (a df-capped shingle still owns a ≤max_df bucket per band it
-        # wins — 256² pairs each), and the wider signature is the cheaper
-        # side of that trade — see containment_lsh_config
-        n_hashes, n_bands = containment_lsh_config(
-            threshold, max_size_ratio, min_rows=2)
-    elif n_hashes is None:
-        n_hashes = 128
-    elif n_bands is None:
-        n_bands = containment_lsh_bands(threshold, max_size_ratio, n_hashes)
-    # one shared corpus pass for candidates + verify (see minhash_lsh_pairs)
-    sh = shingle_rows(docs, n=n, id_col=id_col, text_col=text_col,
-                      max_df=max_df, keep_empty=True).persist()
-    cand = lsh_candidates(docs, n=n, n_hashes=n_hashes, n_bands=n_bands,
-                          id_col=id_col, text_col=text_col, shingles=sh)
-    out = containment_pairs(docs, threshold, n, id_col, text_col,
-                            restrict_pairs=cand, shingles=sh)
-    out = out.localCheckpoint(eager=True)  # free sh/cand caches (see
-    cand.unpersist()                       # minhash_lsh_pairs note)
-    sh.unpersist()
-    return out
+    Signature width and banding come from containment_lsh_config with a
+    rows≥2 floor even under a df cap: measured at sf0.1 the rows=1 config
+    admits 761k candidates vs rows=2's 43k on the same corpus (a df-capped
+    shingle still owns a ≤max_df bucket per band it wins), and the wider
+    signature is the cheaper side of that trade."""
+    n_hashes, n_bands = containment_lsh_config(threshold, max_size_ratio, min_rows=2)
+    return _lsh_verify(containment_pairs, docs, threshold, n, n_hashes, n_bands,
+                       id_col, text_col, max_df)
 
 
 # ------------------------------------------------------------------ simhash
@@ -1178,8 +1064,6 @@ def incremental_dup_flags(
     new_docs: DataFrame,
     threshold: float = 0.8,
     n: int = 3,
-    n_hashes: int = 128,
-    n_bands: int = 32,
     id_col: str = "doc_id",
     text_col: str = "text",
     old_buckets: DataFrame | None = None,
@@ -1214,8 +1098,8 @@ def incremental_dup_flags(
         new.withColumn("_new", F.lit(True))
     )
     if old_buckets is None:
-        old_buckets = band_buckets(old, n=n, n_hashes=n_hashes, n_bands=n_bands)
-    new_buckets = band_buckets(new, n=n, n_hashes=n_hashes, n_bands=n_bands).persist()
+        old_buckets = band_buckets(old, n=n)
+    new_buckets = band_buckets(new, n=n).persist()
     all_buckets = old_buckets.unionByName(new_buckets)
     cand = (
         all_buckets.alias("x")

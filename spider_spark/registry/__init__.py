@@ -58,43 +58,25 @@ _MODULES = [relational, frontier, pool, kline, parse, text, dedup, vector, media
 # =====================================================================
 # Driver-verification window rotation
 # =====================================================================
-# The correctness driver verifies the FIRST 50 registry entries per round.
-# Registration above follows the module's topical layout; the driver-facing
-# order is rotated here. Round-5 window (after r4 all 140 queries have ≥1
-# driver check; 139 green, 1 red): the single red row first
-# (corpus_export_manifest — r04 hash fail, root-caused to DuckDB
-# HUGEINT→float in the driver hasher, oracle now casts ::BIGINT), then
-# this round's additions, then "stalest green first": every r01-checked
-# row (12 — includes the whole dedup tier and crawl_docs), the WARC
-# roundtrips (r03 records, but round-5 Arrow-izes warc.py plumbing), and
-# every r02-checked row (29 — the parse/extraction family whose last hard
-# check predates the round-4 HTML5 charset prescan in dom.py/parse.py).
-# Names listed but not registered are skipped; remaining slots fall to the
-# oldest r03 records in topical order.
+# The correctness driver verifies the FIRST 50 registry entries per round,
+# so the rotation puts failing rows, then rows without a check, then the
+# stalest green records first; names listed but not registered are skipped
+# and the remaining slots fall to the rest in topical order.
 _VERIFY_FIRST: list[str] = [
-    # --- the one red cell in the 140-query matrix (driver r04) ---
-    "corpus_export_manifest",
-    # --- round-5 additions: baseline-JPEG pixel decode, no record yet ---
-    "media_jpeg_decode",
-    # --- last checked r01 (oldest green records) ---
-    "lang_id", "quality_scores", "doc_fingerprints", "dedup_exact",
-    "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_simhash",
-    "dedup_embedding_cosine", "ann_topk", "media_meta", "pagerank_ranks",
-    "crawl_docs",
-    # --- r03 records but round-5 changes the underlying plumbing ---
-    "warc_roundtrip", "warc_dedup_roundtrip",
-    # --- r03 records on the post-prescan dom.py path (verdict item 2) ---
-    "main_content_extract", "anchor_text_agg",
-    # --- last checked r02 (the pre-prescan parse/extraction family) ---
+    "corpus_export_manifest", "media_jpeg_decode", "lang_id", "quality_scores",
+    "doc_fingerprints", "dedup_exact", "dedup_ngram_jaccard",
+    "dedup_minhash_lsh", "dedup_simhash", "dedup_embedding_cosine", "ann_topk",
+    "media_meta", "pagerank_ranks", "crawl_docs", "warc_roundtrip",
+    "warc_dedup_roundtrip", "main_content_extract", "anchor_text_agg",
     "ts_convert", "relative_date_norm", "json_projection", "weibo_field_map",
     "pinyin_city_urls", "sql_ddl_roundtrip", "zhihu_user_items", "md5_ids",
     "regex_extract_scan", "qcc_xpath_fields", "css_select_fields",
     "string_cleanup", "url_normalize", "robots_filter",
     "robots_wildcard_match", "robots_policy_parse", "sitemap_seeds",
-    "pagination_explode", "retry_budget", "coalesce_best_of",
-    "orderbook_pick", "list_projection", "token_counts", "bm25_topk",
-    "tfidf_top_terms", "hll_distinct_tokens", "token_budget_mix",
-    "dup_passage_removed", "dup_passage_spans",
+    "pagination_explode", "retry_budget", "coalesce_best_of", "orderbook_pick",
+    "list_projection", "token_counts", "bm25_topk", "tfidf_top_terms",
+    "hll_distinct_tokens", "token_budget_mix", "dup_passage_removed",
+    "dup_passage_spans",
 ]
 
 

@@ -441,27 +441,28 @@ def mirror_host_pairs(
     techniques to find mirrored hosts on the WWW" (WWW8, 1999 — public):
     two hosts are mirror candidates when their content-digest sets overlap.
 
-    Returns (a_host, b_host, inter, na, nb, containment_min, jaccard) for
-    pairs with ``containment_min ≥ threshold``, where containment_min =
-    |D(a)∩D(b)| / min(|D(a)|,|D(b)|) — 1.0 for a PARTIAL mirror that holds
-    a subset of the original (Jaccard alone under-scores those, which is
-    why Bharat-Broder rank by overlap of the smaller side).
+    Returns (b_host, a_host, inter, na, nb, containment_min, jaccard),
+    a_host < b_host, for pairs with ``containment_min ≥ threshold``, where
+    containment_min = |D(a)∩D(b)| / min(|D(a)|,|D(b)|) — 1.0 for a PARTIAL
+    mirror that holds a subset of the original (Jaccard alone under-scores
+    those, which is why Bharat-Broder rank by overlap of the smaller side).
 
-    Plan shape: distinct (host, digest) → self-join keyed on digest →
-    pair-count groupBy — identical to the shingle-join dedup family
-    (dedup.jaccard_pairs) with hosts as documents and digests as shingles,
-    so the candidate set is host pairs sharing ≥1 digest, never the host
-    cross-product. ``max_hosts_per_digest`` is the same hot-key cap as the
-    shingle max_df: a digest shared by h hosts contributes O(h²) candidate
-    rows (the empty page / default Apache index lives on millions of
-    hosts), so over-popular digests are dropped from the SIMILARITY
-    evidence — Bharat-Broder drop over-popular shingles for exactly this
-    reason. ``min_digests`` suppresses hosts too small to call mirrors.
+    Plan shape: distinct (host, digest) rows → dedup.set_overlap, the
+    shingle-join core of dedup.jaccard_pairs with hosts as documents and
+    digests as shingles, so the candidate set is host pairs sharing ≥1
+    digest, never the host cross-product. ``max_hosts_per_digest`` is the
+    same hot-key cap (dedup._cap_hot) as the shingle max_df: a digest
+    shared by h hosts contributes O(h²) candidate rows (the empty page /
+    default Apache index lives on millions of hosts), so over-popular
+    digests are dropped from the SIMILARITY evidence — Bharat-Broder drop
+    over-popular shingles for exactly this reason. ``min_digests``
+    suppresses hosts too small to call mirrors.
     """
     from spider_spark.canon import host_col
+    from spider_spark.dedup import _cap_hot, set_overlap
 
     # ONE persist at the fan-out point: hd feeds the hot-digest cap, the
-    # size table, and both self-join sides — without it every reference
+    # size count, and both self-join sides — without it every reference
     # re-executes the full capture scan + distinct (measured 48 scans on
     # the fixture plan; 1 with it). The cap anti-join downstream is a
     # broadcast over this cache, cheap to re-derive, so it is NOT persisted
@@ -469,45 +470,22 @@ def mirror_host_pairs(
     # action; one pinned cache per call is the budget).
     hd = (
         captures.select(
-            host_col(F.col(url_col)).alias("host"),
-            F.substring(F.sha2(F.col(html_col), 256), 1, 16).alias("digest"),
+            host_col(F.col(url_col)).alias("doc_id"),
+            F.substring(F.sha2(F.col(html_col), 256), 1, 16).alias("shingle"),
         )
-        .where(F.col("host").isNotNull())
+        .where(F.col("doc_id").isNotNull())
         .distinct()
         .persist()
     )
-    if max_hosts_per_digest is not None:
-        hot = (
-            hd.groupBy("digest")
-            .agg(F.count(F.lit(1)).alias("nh"))
-            .where(F.col("nh") > max_hosts_per_digest)
-            .select("digest")
-        )
-        hd = hd.join(F.broadcast(hot), "digest", "left_anti")
-    sizes = hd.groupBy("host").agg(F.count(F.lit(1)).alias("n_dg")).where(
-        F.col("n_dg") >= min_digests
-    )
-    a = hd.select(F.col("host").alias("a_host"), "digest")
-    b = hd.select(F.col("host").alias("b_host"), "digest")
-    inter = (
-        a.join(b, "digest")
-        .where(F.col("a_host") < F.col("b_host"))
-        .groupBy("a_host", "b_host")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("host").alias("a_host"), F.col("n_dg").alias("na"))
-    sb = sizes.select(F.col("host").alias("b_host"), F.col("n_dg").alias("nb"))
+    ov = set_overlap(_cap_hot(hd, max_hosts_per_digest))
+    inter = F.col("inter").cast("double")
     return (
-        inter.join(sa, "a_host").join(sb, "b_host")
-        .withColumn(
-            "containment_min",
-            F.col("inter").cast("double") / F.least("na", "nb").cast("double"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("inter")).cast("double"),
-        )
+        ov.where((F.col("na") >= min_digests) & (F.col("nb") >= min_digests))
+        .select(F.col("b_id").alias("b_host"), F.col("a_id").alias("a_host"),
+                "inter", "na", "nb")
+        .withColumn("containment_min", inter / F.least("na", "nb").cast("double"))
+        .withColumn("jaccard",
+                    inter / (F.col("na") + F.col("nb") - F.col("inter")).cast("double"))
         .where(F.col("containment_min") >= threshold)
     )
 

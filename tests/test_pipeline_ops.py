@@ -557,20 +557,6 @@ def test_containment_lsh_matches_exact_and_caps_hot_shingles(spark, docs):
     assert dedup.containment_pairs(hotc, 0.01, 3, max_df=10).count() == 0
 
 
-def test_containment_lsh_band_picker_monotone():
-    """Fewest-bands picker: tight thresholds need few bands, loose implied
-    Jaccard floors push toward rows=1 (max bands); result always divides
-    n_hashes and meets the recall target by construction."""
-    tight = dedup.containment_lsh_bands(0.95, max_size_ratio=1.0)
-    loose = dedup.containment_lsh_bands(0.9, max_size_ratio=8.0)
-    assert tight <= loose
-    for bands in (tight, loose):
-        assert 128 % bands == 0
-    j_min = 0.9 / (1.0 + 8.0 - 0.9)
-    rows = 128 // loose
-    assert 1.0 - (1.0 - j_min ** rows) ** loose >= 0.999
-
-
 def test_containment_lsh_config_meets_recall_and_rows_floor():
     """Target-sized config picker: every returned (n_hashes, n_bands)
     meets the recall target at j_min, honors the min_rows floor, and the
