@@ -196,6 +196,17 @@ def seeds_to_frontier(spark: SparkSession, seeds: list[tuple[str, int]], round_n
     )
 
 
+def _miss_rates(fetch_log: DataFrame) -> DataFrame:
+    """Per-host misses per claim as (host, _miss_rate). Rows with
+    partition_id < 0 are telemetry sentinels (the _bloom probe counters),
+    not fetch outcomes, and are left out."""
+    return (
+        fetch_log.where(F.col("partition_id") >= 0)
+        .groupBy("host")
+        .agg((F.sum("n_missed") / F.sum("n_claimed")).alias("_miss_rate"))
+    )
+
+
 def policy_backoff(
     policy: DataFrame,
     fetch_log: DataFrame,
@@ -208,13 +219,7 @@ def policy_backoff(
     by it (floored at 1) — so the next round claims less from hosts that
     are refusing us."""
     rates = (
-        # partition_id < 0 rows are telemetry sentinels (the _bloom probe
-        # counters), not per-host fetch outcomes
-        fetch_log.where(F.col("partition_id") >= 0)
-        .groupBy("host")
-        .agg(
-            (F.sum("n_missed") / F.sum("n_claimed")).alias("_miss_rate"),
-        )
+        _miss_rates(fetch_log)
         .where(F.col("_miss_rate") > miss_threshold)
         .select("host", F.lit(True).alias("_backoff"))
     )
@@ -262,9 +267,7 @@ def policy_recover(
     way Heritrix/TCP treat congestion. Hosts not fetched this round are
     untouched (no evidence either way). Requires pin_policy_base()."""
     rates = (
-        fetch_log.where(F.col("partition_id") >= 0)
-        .groupBy("host")
-        .agg((F.sum("n_missed") / F.sum("n_claimed")).alias("_miss_rate"))
+        _miss_rates(fetch_log)
         .where(F.col("_miss_rate") <= miss_threshold)
         .select("host", F.lit(True).alias("_recover"))
     )
@@ -322,6 +325,22 @@ def budget_from_delay(policy: DataFrame, round_duration: float) -> DataFrame:
     )
 
 
+def _salted_rank(df: DataFrame, key: str, order: tuple[str, ...], limit: int | Column,
+                 n_salt: int) -> DataFrame:
+    """``df`` + ``_srank``, the exact per-``key`` row number over ``order``
+    for every row whose rank can be ≤ ``limit`` (an int or a Column).
+    Two stages against skew: stage 1 keeps the top ``limit`` per
+    (key, url_hash salt), so the exact per-key window of stage 2 never
+    sees more than n_salt·limit rows of one hot key."""
+    salt = F.pmod(F.col("url_hash"), F.lit(n_salt))
+    stage1 = df.withColumn(
+        "_rn1", F.row_number().over(Window.partitionBy(key, salt).orderBy(*order))
+    ).where(F.col("_rn1") <= limit)
+    return stage1.withColumn(
+        "_srank", F.row_number().over(Window.partitionBy(key).orderBy(*order))
+    ).drop("_rn1")
+
+
 def pop_batch(eligible: DataFrame, cfg: CrawlConfig) -> DataFrame:
     """A2/A12: per-host budgeted priority pop, salt-staged against skew.
 
@@ -334,18 +353,9 @@ def pop_batch(eligible: DataFrame, cfg: CrawlConfig) -> DataFrame:
     bind."""
     budget = F.coalesce(F.col("host_budget"), F.lit(-1))
     unlimited = eligible.where(budget < 0)
-    limited = eligible.where(budget >= 0)
-
-    salt = F.pmod(F.col("url_hash"), F.lit(cfg.n_salt))
-    w1 = Window.partitionBy("host", salt).orderBy("priority", "discovered_seq", "url")
-    stage1 = limited.withColumn("_rn1", F.row_number().over(w1)).where(
-        F.col("_rn1") <= budget
-    )
-    w2 = Window.partitionBy("host").orderBy("priority", "discovered_seq", "url")
-    stage2 = stage1.withColumn("_rn2", F.row_number().over(w2)).where(
-        F.col("_rn2") <= budget
-    )
-    return unlimited.unionByName(stage2.drop("_rn1", "_rn2"))
+    limited = _salted_rank(eligible.where(budget >= 0), "host",
+                           ("priority", "discovered_seq", "url"), budget, cfg.n_salt)
+    return unlimited.unionByName(limited.where(F.col("_srank") <= budget).drop("_srank"))
 
 
 def run_round(
@@ -525,25 +535,16 @@ def run_round(
             .groupBy("_trap_scope")
             .agg(F.count(F.lit(1)).alias("_n_host"))
         )
-        # same two-stage salt discipline as pop_batch: a trap host's children
-        # all share one window partition, which is exactly where the
-        # explosion happens — stage 1 truncates to ≤cap per (scope, salt)
-        # before the exact per-scope rank ever sees more than n_salt·cap rows
+        # same salted window as pop_batch: a trap host's children all share
+        # one window partition, which is exactly where the explosion happens
         _cols = new_children.columns
-        new_children = new_children.withColumn(
-            "_trap_scope", _scope(F.col("host")))
-        salt = F.pmod(F.col("url_hash"), F.lit(cfg.n_salt))
-        cw1 = Window.partitionBy("_trap_scope", salt).orderBy(
-            "discovered_seq", "url")
-        s1 = new_children.withColumn("_c1", F.row_number().over(cw1)).where(
-            F.col("_c1") <= cap
-        )
-        cw2 = Window.partitionBy("_trap_scope").orderBy("discovered_seq", "url")
-        s2 = s1.withColumn("_c2", F.row_number().over(cw2))
+        ranked = _salted_rank(
+            new_children.withColumn("_trap_scope", _scope(F.col("host"))),
+            "_trap_scope", ("discovered_seq", "url"), cap, cfg.n_salt)
         new_children = (
-            s2.join(host_counts, "_trap_scope", "left")
+            ranked.join(host_counts, "_trap_scope", "left")
             .where(
-                F.col("_c2") + F.coalesce(F.col("_n_host"), F.lit(0)) <= cap
+                F.col("_srank") + F.coalesce(F.col("_n_host"), F.lit(0)) <= cap
             )
             .select(*_cols)
         )

@@ -1,4 +1,4 @@
-"""Partitioned Bloom-filter URL-seen set (north_rule).
+"""Partitioned URL-seen set: one segment engine, two cell layouts (north_rule).
 
 The reference's seen set is a Redis GET/SET per URL
 (分布式京东商品详情页/mongo_redis_mgr.py:43-47) — an O(1) membership probe in
@@ -7,7 +7,7 @@ bottleneck, so the Spark-native shape is:
 
 - key: ``xxhash64(canonical_url)`` (computed JVM-side, canon.py);
 - state: N hash-partitioned Bloom segments, each a byte array, persisted as
-  the ``seen_segments(bucket, filter, n_items)`` table in every snapshot
+  the ``seen_segments(bucket, filter, n_items, m, k)`` table in every snapshot
   (checkpointed + resumable like everything else);
 - membership: candidates shuffle by ``bucket = pmod(hash, N)`` and cogroup
   with their one segment (``applyInPandas`` over numpy bitops — vectorized,
@@ -18,10 +18,17 @@ bottleneck, so the Spark-native shape is:
   shrinks by ~99%;
 - merge: per-bucket OR of new-key bits — embarrassingly parallel.
 
-Deletions (the cuckoo-filter case): Bloom can't delete, so the fallback is
-counting buckets — see CuckooSeen below, same table contract with 4-bit
-counters enabling remove(). The crawl itself never deletes; CuckooSeen
-exists for frontier-eviction workflows (north_rule names it).
+One engine: ``SeenSet`` holds each segment operation once, as one
+``applyInPandas`` kernel — ``_fresh`` (build, and the overflow rebuild),
+``_fold`` (merge, and removal) and ``mark`` (the probe). The cell layout
+is three class attributes: bytes for m slots, apply, and test. SeenSet's
+layout is one Bloom bit per slot.
+
+Deletions (the cuckoo-filter case): Bloom can't delete, so ``CuckooSeen``
+swaps in a counting layout — one byte per slot holding a 4-bit saturating
+counter — and adds ``removed()``, the same fold with delta −1. The table,
+positions and kernels are shared. The crawl itself never deletes;
+CuckooSeen exists for frontier-eviction workflows (north_rule names it).
 
 Sizing: bits/key ≈ -1.44·log2(fpp); at fpp=1% ≈ 9.6 bits ⇒ a 10^10-URL seen
 set is ~12 GB *total*, i.e. ~12 MB per bucket at N=1024 — each segment fits
@@ -40,7 +47,7 @@ round (cost: one n_buckets-row collect) and logs per-round probe counts
 from __future__ import annotations
 
 import math
-from typing import Iterable
+from typing import Callable, Iterable
 
 import numpy as np
 import pandas as pd
@@ -95,7 +102,9 @@ def _apply_counters(arr, h, delta: int, k: int, m: int) -> None:
 def _test_bits(arr: np.ndarray, h: np.ndarray, k: int, m: int) -> np.ndarray:
     out = np.ones(len(h), dtype=bool)
     for idx in _positions(h, k, m):
-        out &= (arr[idx >> 3] >> (idx & 7)).astype(bool)
+        # mask to the one bit: the shifted byte alone is non-zero whenever
+        # any higher bit of that byte is set
+        out &= ((arr[idx >> 3] >> (idx & 7)) & 1).astype(bool)
     return out
 
 
@@ -107,7 +116,20 @@ def _test_counters(arr: np.ndarray, h: np.ndarray, k: int, m: int) -> np.ndarray
     return out
 
 
+def _segment(bucket: int, arr: np.ndarray, n_items: int, m: int, k: int) -> pd.DataFrame:
+    return pd.DataFrame({"bucket": [bucket], "filter": [arr.tobytes()],
+                         "n_items": [n_items], "m": [m], "k": [k]})
+
+
 class SeenSet:
+    # Cell layout: one Bloom bit per slot (Bloom only adds, so apply ignores
+    # delta). The layout lives in class-level staticmethods so the pandas
+    # closures capture plain functions, never self, whose segments
+    # DataFrame would drag the SparkContext in.
+    _nbytes = staticmethod(lambda m: m // 8)
+    _apply = staticmethod(lambda arr, h, delta, k, m: _set_bits(arr, h, k, m))
+    _test = staticmethod(_test_bits)
+
     def __init__(
         self,
         n_buckets: int = 32,
@@ -134,15 +156,8 @@ class SeenSet:
     def load(cls, spark: SparkSession, workdir, round_no: int, **kw) -> "SeenSet":
         """n_buckets and fpp must match build time — always pass the same
         CrawlConfig values used at build. Per-bucket (m, k) travel in the
-        table itself; pre-geometry snapshots get the config defaults."""
-        seg = tables.read_table(spark, workdir, round_no, "seen_segments")
-        inst = cls(segments=None, **kw)
-        if "m" not in seg.columns:
-            seg = seg.withColumn("m", F.lit(inst.m).cast("long")).withColumn(
-                "k", F.lit(inst.k).cast("int")
-            )
-        inst.segments = seg
-        return inst
+        table itself."""
+        return cls(segments=tables.read_table(spark, workdir, round_no, "seen_segments"), **kw)
 
     def _bucketed(self, df: DataFrame) -> DataFrame:
         hash_col = F.col("url_hash") if "url_hash" in df.columns else url_hash_col(F.col("url"))
@@ -152,69 +167,82 @@ class SeenSet:
             F.pmod(hash_col, F.lit(self.n_buckets)).cast("int").alias("bucket"),
         )
 
+    # -------------------------------------------------------------- kernels
+    def _fresh(self, rows: DataFrame, m_of: Callable[[int], int]) -> DataFrame:
+        """One segment per bucket of the bucketed ``rows``, built from those
+        rows alone at ``m_of(bucket)`` slots; n_items is the distinct key
+        count."""
+        k, nbytes, apply = self.k, self._nbytes, self._apply
+
+        def make(pdf):
+            b = int(pdf["bucket"].iloc[0])
+            m = m_of(b)
+            arr = np.zeros(nbytes(m), dtype=np.uint8)
+            h = np.unique(pdf["url_hash"].to_numpy())
+            apply(arr, h, 1, k, m)
+            return _segment(b, arr, len(h), m, k)
+
+        return rows.groupBy("bucket").applyInPandas(make, schema=SEG_SCHEMA)
+
+    def _fold(self, rows: DataFrame, delta: int) -> DataFrame:
+        """Add (``delta`` = +1) or remove (−1) the distinct keys of ``rows``
+        in one cogroup with the segments. A bucket without a segment starts
+        empty at the configured geometry. A bucket without rows survives
+        through the untouched-bucket union; the cogroup is full outer, so
+        its kernel emits nothing there rather than a second copy.
+
+        n_items drives the overflow rebuild, so it moves only by the keys
+        that did not (add) or did (remove) test present before the fold —
+        re-merged keys never count twice. Removal decrements only keys that
+        test present: an absent key would steal counts from every key
+        sharing its slots. Adding still applies every key, so a counting
+        layout keeps multiset discipline and deleting a colliding key cannot
+        zero a present one's counters."""
+        assert self.segments is not None, "load/build first"
+        m0, k0 = self.m, self.k
+        nbytes, apply, test = self._nbytes, self._apply, self._test
+
+        def fold(key, new_pdf, seg_pdf):
+            if not len(new_pdf):
+                return seg_pdf.iloc[:0]
+            if len(seg_pdf):
+                m, k, n = (int(seg_pdf[c].iloc[0]) for c in ("m", "k", "n_items"))
+                arr = np.frombuffer(seg_pdf["filter"].iloc[0], dtype=np.uint8).copy()
+            else:
+                m, k, n = m0, k0, 0
+                arr = np.zeros(nbytes(m), dtype=np.uint8)
+            h = np.unique(new_pdf["url_hash"].to_numpy())
+            present = test(arr, h, k, m)
+            if delta > 0:
+                apply(arr, h, 1, k, m)
+                n += int((~present).sum())
+            else:
+                apply(arr, h[present], -1, k, m)
+                n -= int(present.sum())
+            return _segment(int(key[0]), arr, max(0, n), m, k)
+
+        bucketed = self._bucketed(rows)
+        folded = (
+            bucketed.groupby("bucket")
+            .cogroup(self.segments.groupby("bucket"))
+            .applyInPandas(fold, schema=SEG_SCHEMA)
+        )
+        untouched = self.segments.join(
+            bucketed.select("bucket").distinct(), "bucket", "left_anti"
+        )
+        self.segments = folded.unionByName(untouched)
+        return self.segments
+
     # --------------------------------------------------------------- build
     def build(self, frontier: DataFrame) -> DataFrame:
         """Build segments from scratch over all frontier URLs."""
-        m, k = self.m, self.k
-
-        def make(pdf):
-            arr = np.zeros(m // 8, dtype=np.uint8)
-            h = np.unique(pdf["url_hash"].to_numpy())
-            _set_bits(arr, h, k, m)
-            return pd.DataFrame(
-                {"bucket": [int(pdf["bucket"].iloc[0])], "filter": [arr.tobytes()],
-                 "n_items": [len(h)], "m": [m], "k": [k]}
-            )
-
-        seg = self._bucketed(frontier).groupBy("bucket").applyInPandas(
-            make, schema=SEG_SCHEMA
-        )
-        self.segments = seg
-        return seg
+        m = self.m
+        self.segments = self._fresh(self._bucketed(frontier), lambda b: m)
+        return self.segments
 
     def merged(self, new_rows: DataFrame) -> DataFrame:
-        """OR the new URLs' bits into the existing segments (per-bucket,
-        per-bucket geometry)."""
-        assert self.segments is not None, "load/build first"
-        m0, k0 = self.m, self.k
-
-        def merge(key, new_pdf, seg_pdf):
-            if len(seg_pdf):
-                m, k = int(seg_pdf["m"].iloc[0]), int(seg_pdf["k"].iloc[0])
-                arr = np.frombuffer(seg_pdf["filter"].iloc[0], dtype=np.uint8).copy()
-                n = int(seg_pdf["n_items"].iloc[0])
-            else:
-                m, k = m0, k0
-                arr = np.zeros(m // 8, dtype=np.uint8)
-                n = 0
-            n_new = 0
-            if len(new_pdf):
-                # n_items drives the overflow-rebuild heuristic, so count
-                # only keys whose bits were not already all set (unique'd
-                # within the batch) — blindly adding len(new_pdf) over-counts
-                # re-merged keys and would trigger spurious rebuilds.
-                h = np.unique(new_pdf["url_hash"].to_numpy())
-                already = _test_bits(arr, h, k, m)
-                _set_bits(arr, h, k, m)
-                n_new = int((~already).sum())
-            return pd.DataFrame(
-                {"bucket": [int(key[0])], "filter": [arr.tobytes()],
-                 "n_items": [n + n_new], "m": [m], "k": [k]}
-            )
-
-        seg = (
-            self._bucketed(new_rows)
-            .groupby("bucket")
-            .cogroup(self.segments.groupby("bucket"))
-            .applyInPandas(merge, schema=SEG_SCHEMA)
-        )
-        # buckets with no new rows must survive untouched
-        untouched = self.segments.join(
-            self._bucketed(new_rows).select("bucket").distinct(), "bucket", "left_anti"
-        )
-        out = seg.unionByName(untouched)
-        self.segments = out
-        return out
+        """Fold the new URLs' keys into their buckets' segments."""
+        return self._fold(new_rows, +1)
 
     def seg_stats(self) -> list[tuple[int, int, int]]:
         """(bucket, n_items, m) triples — the rebuild decision input. The
@@ -232,9 +260,10 @@ class SeenSet:
     ) -> DataFrame | None:
         """Rebuild any bucket whose n_items exceeds its capacity, from the
         frontier, with m doubled until capacity ≥ 2·n_items (k is m/capacity
-        -scaled so it stays constant). ``stats`` may be supplied from a
-        prior manifest (zero-job decision); otherwise one n_buckets-row
-        collect. Returns the new segments or None if no bucket overflowed."""
+        -scaled so it stays constant; n_items resets to the truth).
+        ``stats`` may be supplied from a prior manifest (zero-job decision);
+        otherwise one n_buckets-row collect. Returns the new segments or
+        None if no bucket overflowed."""
         assert self.segments is not None, "load/build first"
         if stats is None:
             stats = self.seg_stats()
@@ -247,38 +276,20 @@ class SeenSet:
                 grow[int(bucket)] = new_m
         if not grow:
             return None
-        k = self.k
-
-        def make(pdf):
-            b = int(pdf["bucket"].iloc[0])
-            m2 = grow[b]
-            arr = np.zeros(m2 // 8, dtype=np.uint8)
-            h = np.unique(pdf["url_hash"].to_numpy())
-            _set_bits(arr, h, k, m2)
-            return pd.DataFrame(
-                {"bucket": [b], "filter": [arr.tobytes()],
-                 "n_items": [len(h)], "m": [m2], "k": [k]}  # n_items reset to truth
-            )
-
         overflow = sorted(grow)
-        rebuilt = (
-            self._bucketed(frontier)
-            .where(F.col("bucket").isin(overflow))
-            .groupBy("bucket")
-            .applyInPandas(make, schema=SEG_SCHEMA)
-        )
+        rows = self._bucketed(frontier).where(F.col("bucket").isin(overflow))
         kept = self.segments.where(~F.col("bucket").isin(overflow))
-        out = rebuilt.unionByName(kept)
-        self.segments = out
-        return out
+        self.segments = self._fresh(rows, grow.__getitem__).unionByName(kept)
+        return self.segments
 
     # ---------------------------------------------------------------- query
     def mark(self, candidates: DataFrame) -> DataFrame:
-        """candidates (must have ``url``) + a ``maybe`` column: Bloom probe
+        """candidates (must have ``url``) + a ``maybe`` column: the probe
         verdict per row (per-bucket geometry). The telemetry-friendly form —
         one persist of this frame yields both halves of split() AND the
         n_maybe/n_new counters without re-probing."""
         assert self.segments is not None, "load/build first"
+        test = self._test
 
         def probe(key, cand_pdf, seg_pdf):
             if not len(cand_pdf):
@@ -290,7 +301,7 @@ class SeenSet:
             else:
                 m, k = int(seg_pdf["m"].iloc[0]), int(seg_pdf["k"].iloc[0])
                 arr = np.frombuffer(seg_pdf["filter"].iloc[0], dtype=np.uint8)
-                maybe = _test_bits(arr, cand_pdf["url_hash"].to_numpy(), k, m)
+                maybe = test(arr, cand_pdf["url_hash"].to_numpy(), k, m)
             return pd.DataFrame({"url": cand_pdf["url"], "maybe": maybe})
 
         marks = (
@@ -321,172 +332,28 @@ class SeenSet:
 class CuckooSeen(SeenSet):
     """Deletion-capable seen-set segments (north_rule's cuckoo fallback).
 
-    Same table contract and double-hashed positions as the Bloom variant,
-    but each position holds a saturating counter instead of a bit —
-    i.e. a counting filter, the simplest of the cuckoo/counting family that
-    supports ``remove()`` (frontier-eviction workflows: dropping a site,
-    revoking robots consent). add = increment (saturate at 15; saturated
-    counters are never decremented, preserving no-false-negative),
-    remove = decrement of present-testing keys only, membership = all
-    counters non-zero. Counters use 4-BIT semantics but are STORED one
-    byte per slot (numpy-vectorizable layout) ⇒ segments are 8× the Bloom
-    bytes for the same fpp (nibble-packing would make it 4× at the cost of
-    shift/mask on every op) — the reason Bloom stays the default for the
-    pure-crawl path that never deletes.
+    The same engine, table and double-hashed positions as the Bloom
+    variant, with a counting cell layout: each slot holds a counter
+    instead of a bit — a counting filter, the simplest of the
+    cuckoo/counting family that supports ``removed()`` (frontier-eviction
+    workflows: dropping a site, revoking robots consent). Membership is
+    all k counters non-zero. Counters have 4-BIT semantics (saturating at
+    15; a saturated counter never decrements, preserving
+    no-false-negative) but are STORED one byte per slot (a
+    numpy-vectorizable layout) ⇒ segments are 8× the Bloom bytes for the
+    same fpp — the reason Bloom stays the default for the pure-crawl path
+    that never deletes.
 
     Deletion contract (standard for counting filters): only remove keys
-    you actually added. removed() guards with a membership test — an
-    absent key is ignored instead of corrupting shared slots — but a false
-    positive (~fpp) can still decrement a colliding key's counters; the
-    exact anti-join downstream remains the correctness backstop.
+    you actually added. An absent key is ignored (see ``_fold``), but a
+    false positive (~fpp) can still decrement a colliding key's counters;
+    the exact anti-join downstream remains the correctness backstop.
     """
 
-    def _segment_op(self, rows: DataFrame, delta: int) -> DataFrame:
-        assert self.segments is not None, "load/build first"
-        m0, k0 = self.m, self.k
-        apply_fn = _apply_counters  # module fn: a bound method would drag
-        # self (and its segments DataFrame → SparkContext) into the closure
-        test_fn = _test_counters
-
-        def op(key, new_pdf, seg_pdf):
-            if len(seg_pdf):
-                m, k = int(seg_pdf["m"].iloc[0]), int(seg_pdf["k"].iloc[0])
-                arr = np.frombuffer(seg_pdf["filter"].iloc[0], dtype=np.uint8).copy()
-                n = int(seg_pdf["n_items"].iloc[0])
-            else:
-                m, k = m0, k0
-                arr = np.zeros(m, dtype=np.uint8)
-                n = 0
-            n_delta = 0
-            if len(new_pdf):
-                # batch-unique, mirroring the Bloom merged() guard: n_items
-                # drives the rebuild heuristic and must track distinct keys
-                h = np.unique(new_pdf["url_hash"].to_numpy())
-                present = test_fn(arr, h, k, m)
-                if delta > 0:
-                    # counters increment for EVERY add (multiset discipline
-                    # — skipping "already present" keys would let a later
-                    # deletion of a colliding key zero this key's counters:
-                    # the classic false-deletion hazard); n_items counts
-                    # only keys not already present (set accounting)
-                    apply_fn(arr, h, +1, k, m)
-                    n_delta = int((~present).sum())
-                else:
-                    # decrement ONLY keys that test present: removing an
-                    # absent key would steal counts from every key sharing
-                    # its slots. Residual risk is a real false positive
-                    # (~fpp), the documented counting-filter deletion
-                    # contract ("only remove what you added").
-                    apply_fn(arr, h[present], -1, k, m)
-                    n_delta = -int(present.sum())
-            return pd.DataFrame(
-                {"bucket": [int(key[0])], "filter": [arr.tobytes()],
-                 "n_items": [max(0, n + n_delta)], "m": [m], "k": [k]}
-            )
-
-        seg = (
-            self._bucketed(rows)
-            .groupby("bucket")
-            .cogroup(self.segments.groupby("bucket"))
-            .applyInPandas(op, schema=SEG_SCHEMA)
-        )
-        untouched = self.segments.join(
-            self._bucketed(rows).select("bucket").distinct(), "bucket", "left_anti"
-        )
-        out = seg.unionByName(untouched)
-        self.segments = out
-        return out
-
-    def build(self, frontier: DataFrame) -> DataFrame:
-        m, k = self.m, self.k
-        apply_fn = _apply_counters
-
-        def make(pdf):
-            arr = np.zeros(m, dtype=np.uint8)
-            apply_fn(arr, pdf["url_hash"].to_numpy(), 1, k, m)
-            return pd.DataFrame(
-                {"bucket": [int(pdf["bucket"].iloc[0])], "filter": [arr.tobytes()],
-                 "n_items": [len(pdf)], "m": [m], "k": [k]}
-            )
-
-        seg = self._bucketed(frontier).groupBy("bucket").applyInPandas(
-            make, schema=SEG_SCHEMA
-        )
-        self.segments = seg
-        return seg
-
-    def merged(self, new_rows: DataFrame) -> DataFrame:
-        return self._segment_op(new_rows, +1)
+    _nbytes = staticmethod(lambda m: m)  # one byte per counter slot
+    _apply = staticmethod(_apply_counters)
+    _test = staticmethod(_test_counters)
 
     def removed(self, rows: DataFrame) -> DataFrame:
         """Delete urls from the seen set — the operation Bloom cannot do."""
-        return self._segment_op(rows, -1)
-
-    def maybe_rebuild(self, frontier: DataFrame, stats=None) -> DataFrame | None:
-        """Counter-segment rebuild (the inherited Bloom version would write
-        BIT segments into a counter table — wrong layout)."""
-        assert self.segments is not None, "load/build first"
-        if stats is None:
-            stats = self.seg_stats()
-        grow: dict[int, int] = {}
-        for bucket, n_items, m in stats:
-            if n_items > self._capacity_of(m):
-                new_m = m
-                while self._capacity_of(new_m) < 2 * n_items:
-                    new_m *= 2
-                grow[int(bucket)] = new_m
-        if not grow:
-            return None
-        k = self.k
-        apply_fn = _apply_counters
-
-        def make(pdf):
-            b = int(pdf["bucket"].iloc[0])
-            m2 = grow[b]
-            arr = np.zeros(m2, dtype=np.uint8)  # one byte per counter slot
-            h = np.unique(pdf["url_hash"].to_numpy())
-            apply_fn(arr, h, 1, k, m2)
-            return pd.DataFrame(
-                {"bucket": [b], "filter": [arr.tobytes()],
-                 "n_items": [len(h)], "m": [m2], "k": [k]}
-            )
-
-        overflow = sorted(grow)
-        rebuilt = (
-            self._bucketed(frontier)
-            .where(F.col("bucket").isin(overflow))
-            .groupBy("bucket")
-            .applyInPandas(make, schema=SEG_SCHEMA)
-        )
-        kept = self.segments.where(~F.col("bucket").isin(overflow))
-        out = rebuilt.unionByName(kept)
-        self.segments = out
-        return out
-
-    def mark(self, candidates: DataFrame) -> DataFrame:
-        assert self.segments is not None, "load/build first"
-
-        def probe(key, cand_pdf, seg_pdf):
-            if not len(cand_pdf):
-                return pd.DataFrame({"url": [], "maybe": []}).astype(
-                    {"url": str, "maybe": bool}
-                )
-            if not len(seg_pdf):
-                maybe = np.zeros(len(cand_pdf), dtype=bool)
-            else:
-                m, k = int(seg_pdf["m"].iloc[0]), int(seg_pdf["k"].iloc[0])
-                arr = np.frombuffer(seg_pdf["filter"].iloc[0], dtype=np.uint8)
-                maybe = np.ones(len(cand_pdf), dtype=bool)
-                h = cand_pdf["url_hash"].to_numpy()
-                for idx in _positions(h, k, m):
-                    maybe &= arr[idx] > 0
-            return pd.DataFrame({"url": cand_pdf["url"], "maybe": maybe})
-
-        marks = (
-            self._bucketed(candidates)
-            .groupby("bucket")
-            .cogroup(self.segments.groupby("bucket"))
-            .applyInPandas(probe, schema="url string, maybe boolean")
-        )
-        joined = candidates.join(marks, "url", "left")
-        return joined.withColumn("maybe", F.coalesce(F.col("maybe"), F.lit(False)))
+        return self._fold(rows, -1)
