@@ -828,84 +828,6 @@ def embedding_dup_pairs_lsh(
     return scored.where(F.col("cos") >= threshold).select("a_id", "b_id")
 
 
-# -------------------------------------------------- dedup cluster resolution
-def connected_survivors(
-    pairs: DataFrame,
-    max_iters: int = 20,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
-) -> DataFrame:
-    """Resolve duplicate PAIRS into clusters: connected components with the
-    minimum member id as the canonical survivor — the step every dedup
-    strategy above feeds (a real pipeline keeps one doc per near-dup
-    cluster, and pair output alone can't say which: a~b, b~c must collapse
-    to ONE survivor even though (a,c) was never emitted).
-
-    Algorithm: distributed label propagation (the standard large-graph CC
-    shape — small-star/large-star simplified): every node starts labeled
-    with itself; each iteration joins labels across edges both ways and
-    takes the min; stops early when an iteration changes nothing (label
-    sum is monotonically non-increasing, so a tiny 2-row agg per iteration
-    detects the fixpoint; lineage truncated per iteration via
-    localCheckpoint). Rounds needed = graph diameter ≤ log for the
-    near-clique clusters dedup produces — max_iters=20 covers any
-    realistic dup topology. Returns (doc_id, survivor_id) for every node
-    that appears in at least one pair.
-    """
-    edges = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).where(F.col("src") != F.col("dst")).distinct().persist()
-    both = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .unionByName(edges.select(F.col("dst").alias("doc_id")))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    prev_sum = None
-    converged = False
-    for _ in range(max_iters):
-        neigh = (
-            both.join(labels.withColumnRenamed("doc_id", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-            .withColumnRenamed("src", "doc_id")
-        )
-        labels = (
-            labels.join(neigh, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))).alias("label"),
-            )
-            .localCheckpoint()  # truncate lineage every iteration
-        )
-        cur = labels.agg(F.sum("label").alias("s"), F.count(F.lit(1)).alias("n")).collect()[0]
-        cur_sum = (cur["s"], cur["n"])
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # label propagation advances ONE hop per iteration; a path-shaped
-        # dup graph (paginated supersets from containment dedup) can exceed
-        # max_iters, and returning the unconverged labels would silently
-        # keep duplicate documents. Fall back to star contraction —
-        # diameter-INDEPENDENT O(log²) rounds — instead of guessing.
-        from spider_spark.graph import connected_components
-
-        cc = connected_components(both, src="src", dst="dst")
-        edges.unpersist()
-        both.unpersist()
-        return cc.select(F.col("node").alias("doc_id"),
-                         F.col("rep").alias("survivor_id"))
-    edges.unpersist()
-    both.unpersist()
-    return labels.select("doc_id", F.col("label").alias("survivor_id"))
-
-
 # ------------------------------------------------------------- semantic dedup
 def semdedup_flags(
     vectors: DataFrame,

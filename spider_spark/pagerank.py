@@ -12,65 +12,100 @@ Here: plain iterative DataFrame PageRank (no GraphFrames dependency, no
 stop-the-world — runs between rounds under snapshot isolation), damping
 α matching the reference's 0.9. Ranks land in ``frontier.priority``
 (negated: lower priority value = popped sooner).
+
+PageRank, TrustRank and OPIC are one walk, ``_propagate``: each node
+spreads its mass evenly over its out-edges and the dangling mass is
+collected; each algorithm is only an initial state and a step that turns
+(received, dangling) into the next state. ``hits`` shares the edge and
+node preamble, ``_link_graph``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def pagerank(links: DataFrame, alpha: float = 0.9, iters: int = 10) -> DataFrame:
-    """links(src, dst) → (url, rank). Dangling mass redistributed uniformly.
-
-    Scale: each iteration is one shuffle (groupBy dst) + one broadcast-able
-    join with out-degrees; out-degrees are computed once and cached. At
-    10^10 edges, AQE handles the hot-dst skew the Zipf corpus creates.
-    """
-    edges = links.select("src", "dst").dropDuplicates(["src", "dst"])
-    edges = edges.persist()
+def _link_graph(links: DataFrame) -> tuple[DataFrame, DataFrame, int]:
+    """links(src, dst) → (edges, nodes, n): the distinct edges and the
+    (url) node set, both persisted, and the node count."""
+    edges = links.select("src", "dst").dropDuplicates(["src", "dst"]).persist()
     nodes = edges.select(F.col("src").alias("url")).union(
         edges.select(F.col("dst").alias("url"))
     ).distinct().persist()
-    n = nodes.count()
+    return edges, nodes, nodes.count()
+
+
+def _propagate(links: DataFrame, iters: int, init, step) -> DataFrame:
+    """The one out-degree mass walk under pagerank, trustrank and opic_cash.
+
+    ``init(nodes, n)`` gives the first state: ``url``, then the mass each
+    node spreads evenly over its out-edges, then any other columns; its
+    ``rank`` column, which may be the mass itself, is what is returned. Each
+    iteration computes ``received`` (url, received) = Σ_{u→v} mass(u)/outdeg(u)
+    and ``dangling`` = the total mass of nodes with no out-edge, then
+    ``step(nodes, n, state, received, dangling)`` gives the next state.
+    Returns (url, rank), materialized; an empty graph gives no rows.
+
+    Scale: each iteration is one groupBy(dst) shuffle plus a broadcast-able
+    join with the out-degrees, which are computed once and cached, and an
+    O(1)-byte dangling-mass collect. At 10^10 edges, AQE handles the hot-dst
+    skew the Zipf corpus creates. Lineage is cut every iteration.
+    """
+    edges, nodes, n = _link_graph(links)
     if n == 0:
         edges.unpersist()
         nodes.unpersist()
         return links.sparkSession.createDataFrame([], "url string, rank double")
 
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).persist()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-
+    state = init(nodes, n)
+    mass = state.columns[1]
     for _ in range(iters):
-        contribs = (
-            edges.join(ranks, edges.src == ranks.url, "inner")
+        spread = state.select("url", mass)
+        received = (
+            edges.join(spread, edges.src == spread.url, "inner")
             .join(outdeg, "src")
-            .select(F.col("dst").alias("url"), (F.col("rank") / F.col("outdeg")).alias("c"))
+            .select(F.col("dst").alias("url"), (F.col(mass) / F.col("outdeg")).alias("c"))
             .groupBy("url")
             .agg(F.sum("c").alias("received"))
         )
-        # dangling nodes contribute their mass uniformly: total rank of
-        # nodes with no out-edges
         dangling = (
-            ranks.join(outdeg, ranks.url == outdeg.src, "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
+            spread.join(outdeg, spread.url == outdeg.src, "left_anti")
+            .agg(F.coalesce(F.sum(mass), F.lit(0.0)))
             .collect()[0][0]
         )
-        base = (1.0 - alpha) / n + alpha * dangling / n
-        ranks = nodes.join(contribs, "url", "left").select(
-            "url",
-            (F.lit(base) + F.lit(alpha) * F.coalesce(F.col("received"), F.lit(0.0))).alias("rank"),
-        )
-        ranks = ranks.localCheckpoint(eager=False)  # truncate iterative lineage
+        state = step(nodes, n, state, received, dangling)
+        state = state.localCheckpoint(eager=False)  # truncate iterative lineage
 
     # materialize BEFORE unpersisting the inputs: the final lazy
     # checkpoint otherwise recomputes the last hop from the raw links
-    # scan on the caller's first action (hits/opic already do this)
-    ranks = ranks.localCheckpoint(eager=True)
+    # scan on the caller's first action
+    ranks = state.select("url", "rank").localCheckpoint(eager=True)
     edges.unpersist()
     outdeg.unpersist()
     nodes.unpersist()
     return ranks
+
+
+def _received() -> Column:
+    """A step's ``received``, 0 for a node no edge reaches."""
+    return F.coalesce(F.col("received"), F.lit(0.0))
+
+
+def pagerank(links: DataFrame, alpha: float = 0.9, iters: int = 10) -> DataFrame:
+    """links(src, dst) → (url, rank). Dangling mass redistributed uniformly:
+
+        r = (1-α)/n + α·dangling/n + α·Mᵀr,   r₀ = 1/n
+    """
+
+    def step(nodes, n, state, received, dangling):
+        base = (1.0 - alpha) / n + alpha * dangling / n
+        return nodes.join(received, "url", "left").select(
+            "url", (F.lit(base) + F.lit(alpha) * _received()).alias("rank"))
+
+    return _propagate(
+        links, iters, lambda nodes, n: nodes.withColumn("rank", F.lit(1.0 / n)), step)
 
 
 def hits(links: DataFrame, iters: int = 5) -> DataFrame:
@@ -95,11 +130,7 @@ def hits(links: DataFrame, iters: int = 5) -> DataFrame:
     skew-split on a cluster; explicit salting not needed since the aggregate
     is partial-aggregable map-side).
     """
-    edges = links.select("src", "dst").dropDuplicates(["src", "dst"]).persist()
-    nodes = edges.select(F.col("src").alias("url")).union(
-        edges.select(F.col("dst").alias("url"))
-    ).distinct().persist()
-    n = nodes.count()
+    edges, nodes, n = _link_graph(links)
     if n == 0:
         edges.unpersist()
         nodes.unpersist()
@@ -172,60 +203,28 @@ def trustrank(links: DataFrame, trusted: DataFrame,
     Dangling mass teleports through d too (consistent personalization —
     mass never leaks to untrusted nodes via dead ends).
 
-    Scale: identical footprint to pagerank() — one groupBy(dst) shuffle +
-    one outdeg join per iteration, an O(1)-byte scalar collect for the
-    dangling mass, lineage cut per iteration. The seed indicator join is
-    computed once, outside the loop.
+    A graph with no trusted node walks an all-zero d, so every rank is 0.
+
+    Scale: identical footprint to pagerank(); d rides the walk's state.
     """
-    edges = links.select("src", "dst").dropDuplicates(["src", "dst"]).persist()
-    nodes = edges.select(F.col("src").alias("url")).union(
-        edges.select(F.col("dst").alias("url"))
-    ).distinct()
     seeds = trusted.select(F.col(trusted.columns[0]).alias("url")).distinct()
-    # teleport vector d, materialized once: indicator/|S∩V| per node
-    base = nodes.join(seeds.withColumn("_s", F.lit(1)), "url", "left").select(
-        "url", F.coalesce(F.col("_s"), F.lit(0)).alias("_s")).persist()
-    n_seeds = base.agg(F.sum("_s")).collect()[0][0] or 0
-    if n_seeds == 0:
-        edges.unpersist()
-        base.unpersist()
-        # no trusted node appears in the graph: nothing is reachable
-        return base.select("url", F.lit(0.0).alias("rank"))
-    d_vec = base.select("url", (F.col("_s") / F.lit(float(n_seeds))).alias("d"))
-    d_vec = d_vec.persist()
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).persist()
-    ranks = d_vec.select("url", F.col("d").alias("rank"))
 
-    for _ in range(iters):
-        contribs = (
-            edges.join(ranks, edges.src == ranks.url, "inner")
-            .join(outdeg, "src")
-            .select(F.col("dst").alias("url"),
-                    (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("url")
-            .agg(F.sum("c").alias("received"))
-        )
-        dangling = (
-            ranks.join(outdeg, ranks.url == outdeg.src, "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .collect()[0][0]
-        )
-        ranks = d_vec.join(contribs, "url", "left").select(
+    def init(nodes, n):
+        flag = nodes.join(seeds.withColumn("_s", F.lit(1)), "url", "left").select(
+            "url", F.coalesce(F.col("_s"), F.lit(0)).alias("_s")).localCheckpoint()
+        n_seeds = flag.agg(F.sum("_s")).collect()[0][0] or 1
+        d = F.col("_s") / F.lit(float(n_seeds))
+        return flag.select("url", d.alias("rank"), d.alias("d"))
+
+    def step(nodes, n, state, received, dangling):
+        d = F.col("d")
+        return state.join(received, "url", "left").select(
             "url",
-            (
-                F.lit(1.0 - alpha) * F.col("d")
-                + F.lit(alpha) * (F.coalesce(F.col("received"), F.lit(0.0))
-                                  + F.lit(dangling) * F.col("d"))
-            ).alias("rank"),
-        )
-        ranks = ranks.localCheckpoint(eager=False)
+            (F.lit(1.0 - alpha) * d
+             + F.lit(alpha) * (_received() + F.lit(dangling) * d)).alias("rank"),
+            "d")
 
-    ranks = ranks.localCheckpoint(eager=True)  # see pagerank: materialize
-    edges.unpersist()                          # before freeing inputs
-    base.unpersist()
-    d_vec.unpersist()
-    outdeg.unpersist()
-    return ranks
+    return _propagate(links, iters, init, step)
 
 
 def apply_priority(frontier: DataFrame, ranks: DataFrame) -> DataFrame:
@@ -252,53 +251,20 @@ def opic_cash(links: DataFrame, iters: int = 5) -> DataFrame:
     priority: ``apply_priority`` accepts the output unchanged via the
     ``rank`` column.
 
-    Scale shape: identical to pagerank() — one Exchange(dst) contribution
-    agg + a broadcast-able out-degree join + an O(1)-byte dangling scalar
-    collect per iteration; state (url, cash, hist) rides one DataFrame,
-    lineage cut per iteration."""
-    edges = links.select("src", "dst").dropDuplicates(["src", "dst"]).persist()
-    nodes = edges.select(F.col("src").alias("url")).union(
-        edges.select(F.col("dst").alias("url"))
-    ).distinct().persist()
-    n = nodes.count()
-    if n == 0:
-        edges.unpersist()
-        nodes.unpersist()
-        return links.sparkSession.createDataFrame([], "url string, rank double")
+    Scale: identical footprint to pagerank(); (cash, hist) ride the
+    walk's state."""
 
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("od")).persist()
-    state = nodes.select(
-        "url", F.lit(1.0 / n).alias("cash"), F.lit(0.0).alias("hist")
-    )
-    for _ in range(iters):
-        received = (
-            edges.join(state.select(F.col("url").alias("src"), "cash"), "src")
-            .join(outdeg, "src")
-            .select(F.col("dst").alias("url"), (F.col("cash") / F.col("od")).alias("c"))
-            .groupBy("url")
-            .agg(F.sum("c").alias("received"))
-        )
-        dangling = (
-            state.join(outdeg, state.url == outdeg.src, "left_anti")
-            .agg(F.coalesce(F.sum("cash"), F.lit(0.0)))
-            .collect()[0][0]
-        )
-        state = (
-            state.join(received, "url", "left")
-            .select(
-                "url",
-                (F.coalesce(F.col("received"), F.lit(0.0))
-                 + F.lit(dangling / n)).alias("cash"),
-                (F.col("hist") + F.col("cash")).alias("hist"),
-            )
-            .localCheckpoint(eager=False)  # truncate iterative lineage
-        )
-    out = state.select("url", (F.col("hist") + F.col("cash")).alias("rank"))
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    outdeg.unpersist()
-    nodes.unpersist()
-    return out
+    def init(nodes, n):
+        return nodes.select("url", F.lit(1.0 / n).alias("cash"),
+                            F.lit(0.0).alias("hist"), F.lit(1.0 / n).alias("rank"))
+
+    def step(nodes, n, state, received, dangling):
+        cash = _received() + F.lit(dangling / n)
+        hist = F.col("hist") + F.col("cash")
+        return state.join(received, "url", "left").select(
+            "url", cash.alias("cash"), hist.alias("hist"), (hist + cash).alias("rank"))
+
+    return _propagate(links, iters, init, step)
 
 
 def focused_priority(

@@ -24,6 +24,15 @@ _LINEITEM_EDGES_SQL = (
 )
 
 
+def _lineitem_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The supplier→part link graph the rank queries share: the Spark side
+    of ``_LINEITEM_EDGES_SQL``."""
+    return T(spark, sf_dir, "lineitem").select(
+        F.col("l_suppkey").cast("string").alias("src"),
+        (F.col("l_partkey") % 100).cast("string").alias("dst"),
+    ).distinct()
+
+
 def _pagerank_oracle(iters: int = 5, alpha: float = 0.9,
                      edges_sql: str = _LINEITEM_EDGES_SQL) -> str:
     pre = f"""
@@ -96,11 +105,7 @@ def trustrank_scores(spark, sf_dir):
     the spam-demotion complement to the reference's single PageRank
     reprioritization signal (master.py:125-149). Oracle = unrolled
     materialized CTE chain."""
-    li = T(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.col("l_suppkey").cast("string").alias("src"),
-        (F.col("l_partkey") % 100).cast("string").alias("dst"),
-    ).distinct()
+    edges = _lineitem_edges(spark, sf_dir)
     nodes = edges.select(F.col("src").alias("url")).union(
         edges.select(F.col("dst").alias("url"))).distinct()
     trusted = nodes.where(F.length("url") == 1)
@@ -113,12 +118,7 @@ def pagerank_ranks(spark, sf_dir):
     """A6 done right (master.py:125-149 semantics, working implementation):
     5 damped iterations with uniform dangling redistribution over the
     supplier→part bipartite graph; oracle = unrolled CTE chain."""
-    li = T(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.col("l_suppkey").cast("string").alias("src"),
-        (F.col("l_partkey") % 100).cast("string").alias("dst"),
-    ).distinct()
-    ranks = pagerank(edges, alpha=0.9, iters=5)
+    ranks = pagerank(_lineitem_edges(spark, sf_dir), alpha=0.9, iters=5)
     return ranks.select(F.col("url").alias("node"), F.round("rank", 8).alias("rank"))
 
 
@@ -166,12 +166,7 @@ def hits_scores(spark, sf_dir):
     surface), auth scores steer recrawl toward link-endorsed pages —
     the hub/auth complement to the reference's single-score
     reprioritization (master.py:125-149). Oracle = unrolled CTE chain."""
-    li = T(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.col("l_suppkey").cast("string").alias("src"),
-        (F.col("l_partkey") % 100).cast("string").alias("dst"),
-    ).distinct()
-    scores = hits(edges, iters=5)
+    scores = hits(_lineitem_edges(spark, sf_dir), iters=5)
     return scores.select(
         F.col("url").alias("node"),
         F.round("hub", 8).alias("hub"),

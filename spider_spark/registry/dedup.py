@@ -125,12 +125,12 @@ def dedup_embedding_cosine(spark, sf_dir):
 )
 def dedup_clusters(spark, sf_dir):
     """Cluster resolution over dup pairs: connected components with
-    min-id survivors (dedup.connected_survivors — distributed label
-    propagation with early fixpoint stop). The pair fixture is a chain
+    min-id survivors (graph.connected_components — alternating
+    large-star/small-star contraction). The pair fixture is a chain
     topology that FORCES transitivity (a~b, b~c, never (a,c)): consecutive
-    ids chained within quintets plus a skip link at each decade, so the
-    propagation needs diameter-many rounds, not one. The oracle is the
-    independent closed form of that topology (survivor = id - id%5)."""
+    ids chained within quintets plus a skip link at each decade, so one
+    min-join over the pairs is not enough. The oracle is the independent
+    closed form of that topology (survivor = id - id%5)."""
     did = F.col("doc_id")
     d = T(spark, sf_dir, "documents").select("doc_id")
     n = d.count()
@@ -140,7 +140,8 @@ def dedup_clusters(spark, sf_dir):
     e2 = d.where((did % 10 == 0) & (did + 2 < n)).select(
         did.alias("a_id"), (did + 2).alias("b_id")
     )
-    return dedup.connected_survivors(e1.unionByName(e2))
+    cc = graph.connected_components(e1.unionByName(e2), src="a_id", dst="b_id")
+    return cc.select(F.col("node").alias("doc_id"), F.col("rep").alias("survivor_id"))
 
 
 @q(

@@ -14,7 +14,8 @@ from spider_spark.round import CrawlConfig
 from spider_spark import tables as tbl
 from spider_spark.registry._base import T, q
 from spider_spark.registry.text import _SQL_TOKENS, _sql_shingles
-from spider_spark.registry.crawl import _LINEITEM_EDGES_SQL, _doc_pages, _pagerank_oracle
+from spider_spark.registry.crawl import (
+    _LINEITEM_EDGES_SQL, _doc_pages, _lineitem_edges, _pagerank_oracle)
 
 
 # =====================================================================
@@ -1274,12 +1275,7 @@ def opic_scores(spark, sf_dir):
     like pagerank/trustrank. Oracle = unrolled materialized CTE chain."""
     from spider_spark.pagerank import opic_cash
 
-    li = T(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.col("l_suppkey").cast("string").alias("src"),
-        (F.col("l_partkey") % 100).cast("string").alias("dst"),
-    ).distinct()
-    return opic_cash(edges, iters=5).select(
+    return opic_cash(_lineitem_edges(spark, sf_dir), iters=5).select(
         F.col("url").alias("node"), F.round("rank", 8).alias("rank")
     )
 

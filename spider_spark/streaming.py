@@ -32,6 +32,16 @@ from spider_spark.round import CrawlConfig
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary"
 
 
+def _pages_stream(spark: SparkSession, ingest_dir: str | Path,
+                  max_files_per_trigger: int | None) -> DataFrame:
+    """The landing directory as a stream of PAGES_SCHEMA rows; a falsy
+    ``max_files_per_trigger`` reads every new file in one trigger."""
+    reader = spark.readStream.schema(PAGES_SCHEMA)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(str(ingest_dir))
+
+
 def stream_crawl(
     spark: SparkSession,
     ingest_dir: str | Path,
@@ -55,11 +65,7 @@ def stream_crawl(
     workdir = Path(workdir)
     corpus_dir = workdir / "corpus"
 
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", "64")
-        .parquet(str(ingest_dir))
-    )
+    stream = _pages_stream(spark, ingest_dir, 64)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch is AT-LEAST-ONCE: a crash between the corpus append
@@ -124,10 +130,7 @@ def stateful_host_progress(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(ingest_dir))
+    stream = _pages_stream(spark, ingest_dir, max_files_per_trigger)
     # canon.host_col, not try_parse_url HOST: HOST nulls underscore hosts
     # and keeps IPv6 brackets, silently misbucketing real hosts (and
     # diverging from the batch engine's host keys)
@@ -195,10 +198,7 @@ def host_fetch_rates(
     host; rows later than the watermark are dropped once the window closes.
     Returns an unstarted streaming DataFrame; sink it with writeStream.
     """
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(ingest_dir))
+    stream = _pages_stream(spark, ingest_dir, max_files_per_trigger)
     return (
         stream.withWatermark("warc_ts", watermark)
         .groupBy(
@@ -239,10 +239,7 @@ def stream_first_wins_urls(
     """
     from spider_spark.canon import url_hash_col
 
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(ingest_dir))
+    stream = _pages_stream(spark, ingest_dir, max_files_per_trigger)
     return (
         stream.withColumn("url_hash", url_hash_col(F.col("url")))
         .withWatermark("warc_ts", watermark)
@@ -267,10 +264,7 @@ def stream_content_seen(
 
     Returns an unstarted streaming DataFrame with the digest column kept
     (the downstream CDX/WARC sinks want it anyway)."""
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(ingest_dir))
+    stream = _pages_stream(spark, ingest_dir, max_files_per_trigger)
     return (
         # sha2 over the RAW binary column — a string cast is lossy (all
         # invalid-UTF-8 bytes map to U+FFFD, so byte-distinct payloads

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from spider_spark import dedup, media, pool, textops, vectorops
+from spider_spark import dedup, graph, media, pool, textops, vectorops
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -578,7 +578,7 @@ def test_containment_lsh_config_meets_recall_and_rows_floor():
     assert (nh, nb) == (512, 256) and nh // nb == 2
 
 
-def test_connected_survivors_matches_union_find_on_real_pairs(spark, docs):
+def test_dup_cluster_reps_match_union_find_on_real_pairs(spark, docs):
     """CC survivor resolution over REAL minhash near-dup pairs must equal a
     python union-find ground truth on the same pairs."""
     pairs = dedup.minhash_lsh_pairs(docs, threshold=0.8).select("a_id", "b_id")
@@ -600,17 +600,19 @@ def test_connected_survivors_matches_union_find_on_real_pairs(spark, docs):
             parent[max(ra, rb)] = min(ra, rb)
     want = {x: find(x) for x in parent}
 
-    got = {r.doc_id: r.survivor_id for r in dedup.connected_survivors(pairs).collect()}
+    cc = graph.connected_components(pairs, src="a_id", dst="b_id")
+    got = {r.node: r.rep for r in cc.collect()}
     assert got == want
 
 
-def test_connected_survivors_chain_needs_propagation(spark):
+def test_dup_cluster_reps_chain_needs_propagation(spark):
     """A 6-node chain (diameter 5) collapses to one survivor — single-hop
     min-joins would get this wrong."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(10, 15)] + [(20, 21)], "a_id long, b_id long"
     )
-    got = {r.doc_id: r.survivor_id for r in dedup.connected_survivors(pairs).collect()}
+    cc = graph.connected_components(pairs, src="a_id", dst="b_id")
+    got = {r.node: r.rep for r in cc.collect()}
     assert got == {**{i: 10 for i in range(10, 16)}, 20: 20, 21: 20}
 
 
@@ -1213,16 +1215,13 @@ def test_containment_pairs_custom_id_col(spark):
     assert (10, 20) in got  # doc 10's shingles all inside doc 20
 
 
-def test_connected_survivors_long_chain_converges(spark):
-    """A path-shaped dup graph longer than max_iters must still resolve to
-    ONE survivor (star-contraction fallback), not silently return
-    unconverged labels."""
-    from spider_spark.dedup import connected_survivors
-
+def test_dup_cluster_reps_long_chain_converges(spark):
+    """A path-shaped dup graph (diameter 29) must resolve to ONE survivor
+    within the default round budget, not return unconverged labels."""
     chain = [(i, i + 1) for i in range(1, 30)]  # diameter 29
     pairs = spark.createDataFrame(chain, "a_id long, b_id long")
-    out = connected_survivors(pairs, max_iters=5)
-    survivors = {r.survivor_id for r in out.collect()}
+    cc = graph.connected_components(pairs, src="a_id", dst="b_id")
+    survivors = {r.rep for r in cc.collect()}
     assert survivors == {1}
 
 
