@@ -60,13 +60,14 @@ def crawl(
     workdir = Path(workdir)
 
     # Compile robots Allow/Disallow patterns (RFC 9309 wildcards +
-    # longest-match lengths) ONCE per crawl — run_round's compile_policy
-    # call is idempotent, so the per-round loop never pays the (tiny,
-    # policy-sized) Arrow stage again. policy_backoff preserves the
-    # compiled columns (withColumn-only).
+    # longest-match lengths) ONCE per crawl. compile_policy is a lazy
+    # pandas UDF, so the eager local checkpoint is what makes it run once:
+    # every round's broadcast then reads the compiled rows instead of
+    # re-running the Arrow stage. run_round's compile_policy call is a
+    # no-op on compiled columns, and policy_backoff keeps them.
     from spider_spark.robots import compile_policy
 
-    policy = compile_policy(policy)
+    policy = compile_policy(policy).localCheckpoint(eager=True)
 
     start = tables.latest_round(workdir) if resume else None
     if start is None:

@@ -377,9 +377,11 @@ def run_round(
     # --- politeness + robots via broadcast policy (A12/A13) ----------------
     # RFC 9309 §2.2.2-2.2.3 matching: '*'/terminal-'$' wildcard rules,
     # longest-match precedence, allow wins length ties, no match ⇒ allowed.
-    # compile_policy is idempotent (crawl() pre-compiles once per crawl;
-    # this covers fixtures that call run_round directly) and runs on the
-    # broadcast-sized policy table only — never a per-URL python stage.
+    # compile_policy is idempotent: crawl() passes a policy it compiled and
+    # checkpointed once per crawl, so this is a no-op there. A fixture that
+    # calls run_round directly compiles here, and then the Arrow stage runs
+    # in every query that broadcasts the policy — but only over the
+    # broadcast-sized policy table, never per URL.
     from spider_spark import robots as R
 
     policy = R.compile_policy(policy)

@@ -4,6 +4,16 @@ Defaults chosen for the 100TB design point, scaled to local mode:
 AQE on (runtime re-plan + skew-join splitting for the host-grouped
 shuffle named in BASELINE.json), Arrow for pandas UDFs, shuffle
 partition count sized to cores locally (cluster: 2-3x total cores).
+
+The codegen cache holds 1000 generated classes instead of Spark's 100.
+One crawl round generates about 200 classes and the cache evicts the
+least recently used, so at 100 entries each round evicts the classes the
+next round needs: every round would Janino-compile about 220-250 classes
+again and the JIT would warm each of them up again. At 1000 entries a
+round compiles only plan shapes the session has not seen yet (a repeat of
+the same crawl compiles 0-8). The setting is static: Spark reads it once, when
+the JVM first generates code, so it is set here, before the SparkContext
+starts.
 """
 
 from __future__ import annotations
@@ -32,6 +42,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPIDER_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -94,8 +94,9 @@ def test_rep_gates_add_no_python_to_the_round(spark, tmp_path):
                         CrawlConfig(honor_meta_robots=flag))
         e = explain(res.frontier)
         # the only sanctioned Python stage is compile_policy's Arrow UDF
-        # over the POLICY-sized table (pre-compiled once per crawl in the
-        # real loop); the html-sized parse path must stay codegen
+        # over the POLICY-sized table (this fixture passes an uncompiled
+        # policy; crawl() compiles and checkpoints it once, so its rounds
+        # carry no Python stage); the html-sized parse path must stay codegen
         # plan STRING occurrences over-count (cached subtrees re-print the
         # one policy stage), so the check is differential: REP on must add
         # zero Python occurrences relative to REP off
